@@ -19,7 +19,78 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from intelligencepipeline_spark import get_spark
+from intelligencepipeline_spark.caching import (
+    fit_build_seconds,
+    release_persisted,
+    release_shared,
+    reset_fit_builds,
+)
 from intelligencepipeline_spark.queries import QUERIES
+
+# The driver keeps only the LAST ~2000 chars of stdout (BENCH_r01
+# proved it: the full ~4 KB per-query line was decapitated and failed
+# to parse). So the full per-query map goes to bench_full.json and the
+# ONE stdout line carries the total plus this headline subset, sized so
+# that every key fits (tests/test_bench_line.py pins it).
+HEADLINE = [
+    # TPC-H relational deck
+    "q1_pricing_summary", "q3_top_revenue", "q9_product_profit",
+    "q18_large_orders",
+    # dedup family
+    "dedup_exact", "minhash_lsh_pairs", "dedup_pipeline",
+    "dedup_clusters", "simhash", "span_dedup_clean",
+    # similarity / ANN
+    "similarity_topk", "ann_lsh_topk", "ann_ivf_topk",
+    "embedding_dedup_pairs", "sparse_cosine_pairs",
+    # text analysis / corpus prep
+    "quality_filter", "lang_id", "tfidf_top_terms", "ner_entities",
+    "corpus_prep_pipeline", "token_packing", "bpe_train",
+    # engine + streaming
+    "engine_enrichment", "consolidation_fold",
+    "streaming_consolidation", "chunk_command_fold",
+    "session_stats", "asof_join", "hypertable_rollup",
+    "streaming_restart_exactly_once", "streaming_join_proof",
+    # round-2 operator families
+    "scd2_dimension", "point_in_time_join", "hll_mergeable_rollup",
+    "heavy_hitters", "pagerank_neardup_graph", "bpe_encode",
+    "entity_resolution",
+    # slowest entries (regression watch)
+    "python_stream_source_resume", "streaming_lsh_edge_ingest",
+    "incremental_components_merge", "streaming_session_ttl",
+    # round-2 continuation families
+    "bloom_prefilter", "cms_frequency", "lsh_recall_audit",
+    "boilerplate_line_removal", "python_datasource_sink",
+    # round-5 families
+    "ivfpq_ann_topk", "ivfpq_residual_topk", "substring_dedup",
+    "quantile_sketch_audit", "forget_key_purge",
+    "streaming_quantile_sketch",
+    # round-6 families
+    "unigram_train", "unigram_encode_stats", "streaming_ivfpq_ingest",
+    "embedding_drift_audit", "incremental_agg_maintenance",
+    "tokenizer_fertility_matrix",
+]
+
+
+def headline_line(
+    total: float, substrate_warm_sec: float, timings: dict[str, float],
+    sf: float,
+) -> str:
+    """The one stdout JSON line: the total, the warm block and every
+    HEADLINE entry's seconds at 2 dp."""
+    return json.dumps(
+        {
+            "metric": "catalog_total_wall",
+            "value": total,
+            "unit": "sec",
+            "n_queries": len(timings),
+            "detail": "bench_full.json",
+            "substrate_warm_sec": substrate_warm_sec,
+            "queries": {
+                k: round(timings[k], 2) for k in HEADLINE if k in timings
+            },
+            "sf": sf,
+        }
+    )
 
 
 def main() -> None:
@@ -32,6 +103,7 @@ def main() -> None:
         "bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     only = set(sys.argv[1:])
+    reset_fit_builds()  # report only this run's cold builds
 
     # Warm the session so timed queries measure steady-state engine
     # throughput, not cold start: JVM JIT + codegen, parquet reader
@@ -104,14 +176,21 @@ def main() -> None:
     # after the driver regenerates testdata their on-disk cache keys
     # are cold, so pre-build them once in this warm block — the timed
     # pass then measures the steady-state probe path, run-to-run
-    # comparable. Cold cache builds are logged per cache root via
-    # caching.record_fit_build and reported in bench_full.json.
+    # comparable. The seeded stores and ingest shards behind
+    # release_provenance_chain, incremental_components_merge and
+    # streaming_lsh_edge_ingest are the same kind of artifact, so
+    # every caching.fit_once cache is built here, and a run on warm
+    # caches reports no per-entry builds. Cold builds are logged per
+    # cache root and reported in bench_full.json.
     # (streaming_ivfpq_ingest shares ivfpq_incremental's index cache
-    # key — its fit side is warmed by that prebuild; the streaming
-    # machinery itself is per-run scratch and is the measured cost)
+    # key, streaming_ivfpq_probe ivfpq_ann_topk's — their fit side is
+    # warmed by those prebuilds; the streaming machinery itself is
+    # per-run scratch and is the measured cost)
     for name in (
         "ann_ivf_topk", "pq_ann_topk", "ivfpq_ann_topk",
         "ivfpq_residual_topk", "ivfpq_incremental",
+        "release_provenance_chain", "incremental_components_merge",
+        "streaming_lsh_edge_ingest",
     ):
         if name in QUERIES and (not only or name in only):
             run_one(name)
@@ -122,11 +201,12 @@ def main() -> None:
     # which catalog entry pays their cold build is an artifact of
     # registry order (the r08 window rotation moved substrate
     # consumers to position 1 and their bench numbers jumped 2-6x).
-    # Warm them un-timed so every ordering measures steady state —
-    # ALSO for filtered runs (`bench.py dedup_clusters`): a
-    # single-entry number that includes the cold substrate build is
-    # not comparable to the bench_full.json numbers bench_diff
-    # triages against, which is exactly when `only` gets used.
+    # Warm them here (timed as substrate_warm_sec) so every ordering
+    # measures steady state — ALSO for filtered runs (`bench.py
+    # dedup_clusters`): a single-entry number that includes the cold
+    # substrate build is not comparable to the bench_full.json numbers
+    # bench_diff triages against, which is exactly when `only` gets
+    # used.
     from intelligencepipeline_spark.queries import (
         _funnel_stages,
         _shared_base_components,
@@ -152,19 +232,19 @@ def main() -> None:
     # tokenizer fit substrates (r11): 7 entries replay the identical
     # BPE/unigram/WordPiece trainings — fit-once artifacts at ingest
     # in a real deployment (caching.shared_fit docstring); warm them
-    # un-timed for the same registry-order-independence reason.
+    # in this block for the same registry-order-independence reason.
     _shared_bpe_merges(spark, sf_dir)
     _shared_unigram_model(spark, sf_dir)
     _shared_wordpiece_vocab(spark, sf_dir)
     # LM-gate score frame (r11): four entries + the funnel's LM stage
     # consume the identical per-doc scoring pass — the at-rest score
-    # column a curation run writes once; warm it un-timed likewise.
+    # column a curation run writes once; warm it here likewise.
     from intelligencepipeline_spark.queries import _shared_lm_gate
 
     _shared_lm_gate(spark, sf_dir).count()
     # NB-classifier score frame (r11): three entries consume the
     # identical trained-NB scoring pass — same at-rest-score argument
-    # as the LM gate; warm it un-timed likewise.
+    # as the LM gate; warm it here likewise.
     from intelligencepipeline_spark.queries import _shared_nb_scores
 
     _shared_nb_scores(spark, sf_dir).count()
@@ -174,6 +254,8 @@ def main() -> None:
     _funnel_stages(spark, sf_dir)[4].count()
 
     substrate_warm_sec = round(time.time() - t_warm0, 3)
+    warm_builds = fit_build_seconds()
+    reset_fit_builds()
 
     # The host shows episodic multi-second scheduling stalls (same
     # query: 0.9s one run, 10s the next; load spikes from co-tenants
@@ -220,12 +302,7 @@ def main() -> None:
             timings[name] = min(t, run_one(name))
             passes[name] += 1
 
-    from intelligencepipeline_spark.caching import (
-        fit_build_seconds,
-        release_persisted,
-        release_shared,
-    )
-
+    entry_builds = fit_build_seconds()
     release_persisted()
     release_shared()  # per-entry + shared substrates (ownership contract)
     # Total = per-entry sum + the substrate warm block, so the printed
@@ -235,11 +312,6 @@ def main() -> None:
     entries_total = round(sum(timings.values()), 3)
     total = round(entries_total + substrate_warm_sec, 3)
 
-    # The driver keeps only the LAST ~2000 chars of stdout (BENCH_r01
-    # proved it: the full ~4 KB per-query line was decapitated and
-    # failed to parse). So: full per-query map -> bench_full.json on
-    # disk, and the ONE stdout JSON line carries the total plus a
-    # headline subset, trimmed to fit the tail window whole.
     full_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_full.json"
     )
@@ -254,70 +326,25 @@ def main() -> None:
                 "sf": sf,
                 "substrate_warm_sec": substrate_warm_sec,
                 "catalog_entries_sec": entries_total,
-                "fit_cache_builds": fit_build_seconds(),
+                "fit_cache_builds": {
+                    "substrate_warm": warm_builds,
+                    "catalog_entries": entry_builds,
+                    "note": (
+                        "cold fit_once build sec per cache root, already"
+                        " inside the timings: substrate_warm in"
+                        " substrate_warm_sec (so in value);"
+                        " catalog_entries in the building entry's first"
+                        " pass, which value keeps only where that pass"
+                        " was the entry's minimum"
+                    ),
+                },
                 "passes": passes,
                 "n_pass2": sum(1 for n in passes.values() if n >= 2),
             },
             fh,
         )
 
-    headline = [
-        # TPC-H relational deck
-        "q1_pricing_summary", "q3_top_revenue", "q9_product_profit",
-        "q13_customer_distribution", "q18_large_orders",
-        "q21_blocking_supplier",
-        # dedup family
-        "dedup_exact", "minhash_lsh_pairs", "dedup_pipeline",
-        "dedup_clusters", "simhash", "span_dedup_clean",
-        # similarity / ANN
-        "similarity_topk", "ann_lsh_topk", "ann_ivf_topk",
-        "embedding_dedup_pairs", "sparse_cosine_pairs",
-        # text analysis / corpus prep
-        "quality_filter", "lang_id", "tfidf_top_terms", "ner_entities",
-        "corpus_prep_pipeline", "token_packing", "bpe_train",
-        # engine + streaming
-        "engine_enrichment", "consolidation_fold",
-        "streaming_consolidation", "chunk_command_fold",
-        "session_stats", "asof_join", "hypertable_rollup",
-        "streaming_restart_exactly_once", "streaming_join_proof",
-        # round-2 operator families
-        "scd2_dimension", "point_in_time_join", "hll_mergeable_rollup",
-        "heavy_hitters", "pagerank_neardup_graph", "bpe_encode",
-        "entity_resolution",
-        # prior slow entries (regression watch)
-        "hashed_embedding", "jaccard_pairs", "sentence_chunks",
-        "q10_returned_items", "q17_small_quantity_revenue",
-        # round-2 continuation families
-        "avro_serde_roundtrip", "bloom_prefilter", "cms_frequency",
-        "url_domain_caps", "lsh_recall_audit", "leakage_safe_split",
-        "boilerplate_line_removal", "python_datasource_sink",
-        "variant_json_ops", "token_budget_mix",
-        # round-5 families
-        "ivfpq_ann_topk", "ivfpq_residual_topk", "substring_dedup",
-        "temperature_mix", "quantile_sketch_audit", "forget_key_purge",
-        "png_decode_stats", "streaming_quantile_sketch",
-        # round-6 families
-        "unigram_train", "unigram_encode_stats", "streaming_ivfpq_ingest",
-        "embedding_drift_audit", "join_cardinality_advisor",
-        "incremental_agg_maintenance", "bucketed_colocated_join",
-        "image_dhash_near_pairs", "tokenizer_fertility_matrix",
-    ]
-    sub = {k: timings[k] for k in headline if k in timings}
-    line = {
-        "metric": "catalog_total_wall",
-        "value": total,
-        "unit": "sec",
-        "n_queries": len(timings),
-        "detail": "bench_full.json",
-        "substrate_warm_sec": substrate_warm_sec,
-        "queries": sub,
-        "sf": sf,
-    }
-    out = json.dumps(line)
-    while len(out) > 1900 and sub:
-        sub.popitem()
-        out = json.dumps(line)
-    print(out)
+    print(headline_line(total, substrate_warm_sec, timings, sf))
 
 
 if __name__ == "__main__":

@@ -269,8 +269,9 @@ def cdc_chunk_rows(
                     cs.append(" ".join(toks[s - 1 : e]))
             yield pd.DataFrame({key: ids, "chunk": cs})
 
+    key_type = df.schema[key].dataType.simpleString()
     return df.select(key, text_col).mapInPandas(
-        gen, f"{key} long, chunk string"
+        gen, f"{key} {key_type}, chunk string"
     )
 
 

@@ -42,6 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from intelligencepipeline_spark.caching import fit_once
 from intelligencepipeline_spark.operators.litexpr import int_array_lit
 from intelligencepipeline_spark.operators.similarity import SCALE
 
@@ -163,54 +164,34 @@ def ivf_index(
     WITH ``cell``, optionally persisted PARTITIONED BY cell so probes
     partition-prune (read n_probe/k of the files, not the corpus).
 
-    ``cache_root`` given → the index is written once under a key
-    derived from the input files (path+size+mtime) and reloaded on
-    every later call/process: the query path never contains a fit or
-    assignment stage again. This is the at-rest layout a 100 TB
-    deployment writes during ingest."""
-    spark = embeddings.sparkSession
-    if cache_root is None:
+    ``cache_root`` given → the index is written once through
+    :func:`caching.fit_once` and reloaded on every later call/process:
+    the query path never contains a fit or assignment stage again.
+    This is the at-rest layout a 100 TB deployment writes during
+    ingest."""
+
+    def fit() -> tuple[np.ndarray, DataFrame]:
         centroids = kmeans_fit(
             embeddings, k=n_clusters, iters=iters,
             id_col=id_col, vec_col=vec_col,
         )
         return centroids, ivf_assign(embeddings, centroids, id_col, vec_col)
 
-    sig_parts = [f"k={n_clusters}", f"it={iters}", f"s={SCALE}"]
-    for path in sorted(embeddings.inputFiles()):
-        if path.startswith("file:"):
-            local = path[len("file:"):]
-            try:
-                st = os.stat(local)
-                sig_parts.append(f"{local}:{st.st_size}:{st.st_mtime_ns}")
-            except OSError:
-                sig_parts.append(local)
-        else:
-            sig_parts.append(path)
-    key = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:16]
-    base = os.path.join(cache_root, key)
-    cent_path = os.path.join(base, "centroids.npy")
-    table_path = os.path.join(base, "table")
-    done_path = os.path.join(base, "_DONE")
-    if os.path.exists(done_path):
-        centroids = np.load(cent_path)
-        return centroids, spark.read.parquet(table_path)
-    import time as _time
+    if cache_root is None:
+        return fit()
 
-    from intelligencepipeline_spark.caching import record_fit_build
+    def build(d: str) -> None:
+        centroids, assigned = fit()
+        assigned.write.partitionBy("cell").parquet(os.path.join(d, "table"))
+        np.save(os.path.join(d, "centroids.npy"), centroids)
 
-    _t0 = _time.time()
-    os.makedirs(base, exist_ok=True)
-    centroids = kmeans_fit(
-        embeddings, k=n_clusters, iters=iters, id_col=id_col, vec_col=vec_col
+    base = fit_once(
+        cache_root, embeddings, f"k={n_clusters},it={iters},s={SCALE}", build
     )
-    assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(table_path)
-    np.save(cent_path, centroids)
-    with open(done_path, "w") as fh:
-        fh.write("ok")
-    record_fit_build(cache_root, _time.time() - _t0)
-    return centroids, spark.read.parquet(table_path)
+    return (
+        np.load(os.path.join(base, "centroids.npy")),
+        embeddings.sparkSession.read.parquet(os.path.join(base, "table")),
+    )
 
 
 def ivf_topk(

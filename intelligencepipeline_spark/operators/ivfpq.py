@@ -39,13 +39,13 @@ and exact re-rank are identical either way.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from intelligencepipeline_spark.caching import fit_once
 from intelligencepipeline_spark.operators.litexpr import (
     int_array_lit,
     int_matrix_lit,
@@ -69,9 +69,8 @@ def ivfpq_index_integer(
     """Build (or load) the fit-once IVFPQ index. Returns
     ``(coarse_centroids, pq_codebooks, table)`` where table =
     (id, qvec, codes, cell) — at rest PARTITIONED BY cell when
-    ``cache_root`` is given (the ivf_index/pq_index caching
-    discipline: params + input-file signature key, _DONE two-phase
-    commit), so the probe path partition-prunes and never re-fits.
+    ``cache_root`` is given (:func:`caching.fit_once`), so the probe
+    path partition-prunes and never re-fits.
 
     ``residual=True`` is the faiss-default IVFADC refinement: PQ
     codebooks train on and codes store r = qvec - coarse_centroid[cell]
@@ -91,11 +90,12 @@ def ivfpq_index_integer(
     time. qvec is kept in the at-rest table so the exact re-rank reads
     the probed partitions only — raw-vector storage stays cold."""
     from intelligencepipeline_spark.operators.kmeans import kmeans
-    from intelligencepipeline_spark.operators.pq import pq_fit_integer
+    from intelligencepipeline_spark.operators.pq import (
+        codebooks_from_json,
+        pq_fit_integer,
+    )
 
-    spark = embeddings.sparkSession
-
-    def build() -> tuple[dict, dict, DataFrame]:
+    def fit() -> tuple[dict, dict, DataFrame]:
         assigned, coarse = kmeans(
             embeddings, k=k_coarse, iterations=iters,
             id_col=id_col, vec_col=vec_col,
@@ -130,56 +130,30 @@ def ivfpq_index_integer(
         return coarse, cbs, table
 
     if cache_root is None:
-        return build()
+        return fit()
+
+    def build(d: str) -> None:
+        coarse, cbs, table = fit()
+        table.write.partitionBy("cell").parquet(os.path.join(d, "table"))
+        with open(os.path.join(d, "quantizers.json"), "w") as fh:
+            json.dump({"coarse": coarse, "pq": cbs}, fh)
 
     # sig_extra disambiguates indexes built over a FILTERED view of
     # the same files (inputFiles alone would collide the cache keys)
-    sig_parts = [
-        f"ivfpq,kc={k_coarse}", f"m={m}", f"kpq={k_pq}",
-        f"it={iters}", f"s={SCALE}", f"res={int(residual)}",
-        f"x={sig_extra}",
-    ]
-    for path in sorted(embeddings.inputFiles()):
-        if path.startswith("file:"):
-            local = path[len("file:"):]
-            try:
-                st = os.stat(local)
-                sig_parts.append(f"{local}:{st.st_size}:{st.st_mtime_ns}")
-            except OSError:
-                sig_parts.append(local)
-        else:
-            sig_parts.append(path)
-    key = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:16]
-    base = os.path.join(cache_root, key)
-    meta_path = os.path.join(base, "quantizers.json")
-    table_path = os.path.join(base, "table")
-    done_path = os.path.join(base, "_DONE")
-    if os.path.exists(done_path):
-        with open(meta_path) as fh:
-            raw = json.load(fh)
-        coarse = {
-            int(c): [int(v) for v in cent]
-            for c, cent in raw["coarse"].items()
-        }
-        cbs = {
-            int(j): {int(c): [int(v) for v in cent] for c, cent in sub.items()}
-            for j, sub in raw["pq"].items()
-        }
-        return coarse, cbs, spark.read.parquet(table_path)
-    import time as _time
-
-    from intelligencepipeline_spark.caching import record_fit_build
-
-    _t0 = _time.time()
-    os.makedirs(base, exist_ok=True)
-    coarse, cbs, table = build()
-    table.write.mode("overwrite").partitionBy("cell").parquet(table_path)
-    with open(meta_path, "w") as fh:
-        json.dump({"coarse": coarse, "pq": cbs}, fh)
-    with open(done_path, "w") as fh:
-        fh.write("ok")
-    record_fit_build(cache_root, _time.time() - _t0)
-    return coarse, cbs, spark.read.parquet(table_path)
+    base = fit_once(
+        cache_root,
+        embeddings,
+        f"ivfpq,kc={k_coarse},m={m},kpq={k_pq},it={iters},s={SCALE},"
+        f"res={int(residual)},x={sig_extra}",
+        build,
+    )
+    with open(os.path.join(base, "quantizers.json")) as fh:
+        raw = json.load(fh)
+    coarse = {
+        int(c): [int(v) for v in cent] for c, cent in raw["coarse"].items()
+    }
+    table = embeddings.sparkSession.read.parquet(os.path.join(base, "table"))
+    return coarse, codebooks_from_json(raw["pq"]), table
 
 
 def probe_cells(

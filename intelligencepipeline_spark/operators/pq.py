@@ -31,10 +31,14 @@ exact brute-force baseline (tests/test_pq.py).
 
 from __future__ import annotations
 
+import json
+import os
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from intelligencepipeline_spark.caching import fit_once
 from intelligencepipeline_spark.operators.ivf import _sample_matrix
 from intelligencepipeline_spark.operators.litexpr import (
     int_array_lit,
@@ -146,62 +150,6 @@ def pq_topk(
 
     scored = codes.mapInPandas(score, f"{id_col} long, adc_dist double")
     return scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(k)
-
-
-def pq_index(
-    embeddings: DataFrame,
-    m: int = 16,
-    k: int = 64,
-    iters: int = 5,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cache_root: str | None = None,
-) -> tuple[np.ndarray, DataFrame]:
-    """Build (or load) the fit-once PQ index: codebooks + the code
-    table, cached under a key derived from the input files (the
-    ivf_index discipline) so the query path never re-fits or
-    re-encodes."""
-    import hashlib
-    import os
-
-    spark = embeddings.sparkSession
-    if cache_root is None:
-        cbs = pq_fit(embeddings, m, k, iters, dim, id_col, vec_col)
-        return cbs, pq_encode(embeddings, cbs, id_col, vec_col)
-    sig_parts = [f"m={m}", f"k={k}", f"it={iters}", f"s={SCALE}"]
-    for path in sorted(embeddings.inputFiles()):
-        if path.startswith("file:"):
-            local = path[len("file:"):]
-            try:
-                st = os.stat(local)
-                sig_parts.append(f"{local}:{st.st_size}:{st.st_mtime_ns}")
-            except OSError:
-                sig_parts.append(local)
-        else:
-            sig_parts.append(path)
-    key = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:16]
-    base = os.path.join(cache_root, key)
-    cb_path = os.path.join(base, "codebooks.npy")
-    table_path = os.path.join(base, "codes")
-    done_path = os.path.join(base, "_DONE")
-    if os.path.exists(done_path):
-        cbs = np.load(cb_path)
-        return cbs, spark.read.parquet(table_path)
-    import time as _time
-
-    from intelligencepipeline_spark.caching import record_fit_build
-
-    _t0 = _time.time()
-    os.makedirs(base, exist_ok=True)
-    cbs = pq_fit(embeddings, m, k, iters, dim, id_col, vec_col)
-    codes = pq_encode(embeddings, cbs, id_col, vec_col)
-    codes.write.mode("overwrite").parquet(table_path)
-    np.save(cb_path, cbs)
-    with open(done_path, "w") as fh:
-        fh.write("ok")
-    record_fit_build(cache_root, _time.time() - _t0)
-    return cbs, spark.read.parquet(table_path)
 
 
 def pq_encode_integer(
@@ -351,55 +299,36 @@ def pq_index_integer(
     vec_col: str = "embedding",
     cache_root: str | None = None,
 ) -> tuple[dict[int, dict[int, list[int]]], DataFrame]:
-    """Fit-once cache over pq_fit_integer (the pq_index discipline:
-    key = params + input file signature, two-phase _DONE commit): the
-    codebooks land as JSON, the coded table as parquet, and the query
-    path never re-fits or re-encodes."""
-    import hashlib
-    import json
-    import os
-
-    spark = embeddings.sparkSession
+    """Fit-once cache over pq_fit_integer (:func:`caching.fit_once`):
+    the codebooks land as JSON, the coded table as parquet, and the
+    query path never re-fits or re-encodes."""
     if cache_root is None:
         return pq_fit_integer(embeddings, m, k, iters, dim, id_col, vec_col)
-    sig_parts = [f"int,m={m}", f"k={k}", f"it={iters}", f"s={SCALE}"]
-    for path in sorted(embeddings.inputFiles()):
-        if path.startswith("file:"):
-            local = path[len("file:"):]
-            try:
-                st = os.stat(local)
-                sig_parts.append(f"{local}:{st.st_size}:{st.st_mtime_ns}")
-            except OSError:
-                sig_parts.append(local)
-        else:
-            sig_parts.append(path)
-    key = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:16]
-    base = os.path.join(cache_root, key)
-    cb_path = os.path.join(base, "codebooks.json")
-    table_path = os.path.join(base, "coded")
-    done_path = os.path.join(base, "_DONE")
-    if os.path.exists(done_path):
-        with open(cb_path) as fh:
-            raw = json.load(fh)
-        cbs = {
-            int(j): {int(c): [int(v) for v in cent] for c, cent in sub.items()}
-            for j, sub in raw.items()
-        }
-        return cbs, spark.read.parquet(table_path)
-    import time as _time
 
-    from intelligencepipeline_spark.caching import record_fit_build
+    def build(d: str) -> None:
+        cbs, coded = pq_fit_integer(
+            embeddings, m, k, iters, dim, id_col, vec_col
+        )
+        coded.write.parquet(os.path.join(d, "coded"))
+        with open(os.path.join(d, "codebooks.json"), "w") as fh:
+            json.dump(cbs, fh)
 
-    _t0 = _time.time()
-    os.makedirs(base, exist_ok=True)
-    cbs, coded = pq_fit_integer(embeddings, m, k, iters, dim, id_col, vec_col)
-    coded.write.mode("overwrite").parquet(table_path)
-    with open(cb_path, "w") as fh:
-        json.dump(cbs, fh)
-    with open(done_path, "w") as fh:
-        fh.write("ok")
-    record_fit_build(cache_root, _time.time() - _t0)
-    return cbs, spark.read.parquet(table_path)
+    base = fit_once(
+        cache_root, embeddings, f"int,m={m},k={k},it={iters},s={SCALE}", build
+    )
+    with open(os.path.join(base, "codebooks.json")) as fh:
+        cbs = codebooks_from_json(json.load(fh))
+    return cbs, embeddings.sparkSession.read.parquet(
+        os.path.join(base, "coded")
+    )
+
+
+def codebooks_from_json(raw: dict) -> dict[int, dict[int, list[int]]]:
+    """Integer codebooks back from their JSON form (keys are strings)."""
+    return {
+        int(j): {int(c): [int(v) for v in cent] for c, cent in sub.items()}
+        for j, sub in raw.items()
+    }
 
 
 def adc_lut_integer(

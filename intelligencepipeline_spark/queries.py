@@ -21,9 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-import time
-
-from intelligencepipeline_spark.caching import record_fit_build, track_persist
+from intelligencepipeline_spark.caching import fit_once, track_persist
 from intelligencepipeline_spark.scratch import scratch_dir
 from intelligencepipeline_spark.session import MICROBATCH_SHUFFLE_PARTITIONS
 from intelligencepipeline_spark.sources.tables import load_table
@@ -22044,8 +22042,6 @@ def release_provenance_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded group sizes. One output row per released doc. Oracle
     composes the funnel CTEs, license precedence, the token-count
     producer condition, and both absorption counts."""
-    import hashlib
-    import json as _json
     import os
 
     from intelligencepipeline_spark.engine import Engine
@@ -22056,39 +22052,19 @@ def release_provenance_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # physical source shards + _metadata purity proof. The 3 shard
     # files are a PURE function of the corpus (doc_id % 3), i.e. the
     # at-rest ingest layout itself — build them once per corpus under
-    # the fit-once cache (the ivf_index / _seed_component_stores
-    # discipline) and read straight from the cache (read-only; no
+    # caching.fit_once and read straight from the cache (read-only; no
     # scratch copy needed). The purity assert still runs per call,
     # but against the cached files — one small keyed agg.
-    sig_parts = ["prov_shards,v1"]
-    for path in sorted(docs.inputFiles()):
-        if path.startswith("file:"):
-            local = path[len("file:"):]
-            try:
-                st = os.stat(local)
-                sig_parts.append(
-                    f"{local}:{st.st_size}:{st.st_mtime_ns}"
-                )
-            except OSError:
-                sig_parts.append(local)
-        else:
-            sig_parts.append(path)
-    key = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:16]
-    staged = os.path.join("/tmp/ip_prov_cache", key)
-    done = os.path.join(staged, "_DONE")
-    if not os.path.exists(done):
-        _t0 = time.time()
-        os.makedirs(staged, exist_ok=True)
+    def build(d: str) -> None:
         base = docs.select(
             "doc_id", (F.col("doc_id") % 3).alias("g"), "text"
         )
         for g in range(3):
-            base.filter(F.col("g") == g).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(staged, f"g{g}"))
-        with open(done, "w") as fh:
-            fh.write(_json.dumps({"shards": 3}))
-        record_fit_build("/tmp/ip_prov_cache", time.time() - _t0)
+            base.filter(F.col("g") == g).coalesce(1).write.parquet(
+                os.path.join(d, f"g{g}")
+            )
+
+    staged = fit_once("/tmp/ip_prov_cache", docs, "prov_shards", build)
     back = track_persist(
         spark.read.parquet(f"{staged}/g*").select(
             "doc_id", "g", F.col("_metadata.file_name").alias("fname")
@@ -22223,12 +22199,9 @@ def _seed_component_stores(
     """Build (or copy from the fit-once cache) the two pristine
     at-rest stores incremental_components_merge maintains: the
     node-keyed merge_upsert label store and the component-keyed
-    snapshot-store index. Cache key = documents input signature +
-    n_buckets (the ivf_index discipline: params + file signature,
-    _DONE two-phase commit); the run works on a scratch COPY because
-    the stream mutates the stores."""
-    import hashlib
-    import json as _json
+    snapshot-store index, keyed on the documents input + n_buckets
+    (caching.fit_once); the run works on a scratch COPY because the
+    stream mutates the stores."""
     import os
     import shutil as _sh
 
@@ -22238,47 +22211,21 @@ def _seed_component_stores(
         touched_buckets,
     )
 
-    sig_parts = [f"icm,nb={n_buckets}"]
-    for path in sorted(_t(spark, sf_dir, "documents").inputFiles()):
-        if path.startswith("file:"):
-            local = path[len("file:"):]
-            try:
-                st = os.stat(local)
-                sig_parts.append(
-                    f"{local}:{st.st_size}:{st.st_mtime_ns}"
-                )
-            except OSError:
-                sig_parts.append(local)
-        else:
-            sig_parts.append(path)
-    key = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:16]
-    base = os.path.join("/tmp/ip_icm_cache", key)
-    done = os.path.join(base, "_DONE")
-    if not os.path.exists(done):
-        # atomic build (the _seed_signature_store discipline): temp
-        # sibling + rename so _DONE never coexists with partial
-        # bucket-store generations.
-        _t0 = time.time()
-        os.makedirs(os.path.dirname(base), exist_ok=True)
-        tmp = f"{base}.tmp{os.getpid()}"
-        _sh.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "compidx"))
+    def build(d: str) -> None:
         merge_upsert(
-            base_labels, os.path.join(tmp, "labels"),
+            base_labels, os.path.join(d, "labels"),
             key="node", n_buckets=n_buckets,
         )
         seed = base_labels.withColumn("bucket", cb)
+        os.makedirs(os.path.join(d, "compidx"))
         commit_buckets(
-            os.path.join(tmp, "compidx"), seed, touched_buckets(seed, cb)
+            os.path.join(d, "compidx"), seed, touched_buckets(seed, cb)
         )
-        with open(os.path.join(tmp, "_DONE"), "w") as fh:
-            fh.write(_json.dumps({"n_buckets": n_buckets}))
-        _sh.rmtree(base, ignore_errors=True)  # pre-fix partial build
-        try:
-            os.rename(tmp, base)
-        except OSError:  # concurrent builder won the rename
-            _sh.rmtree(tmp, ignore_errors=True)
-        record_fit_build("/tmp/ip_icm_cache", time.time() - _t0)
+
+    base = fit_once(
+        "/tmp/ip_icm_cache", _t(spark, sf_dir, "documents"),
+        f"icm,nb={n_buckets}", build,
+    )
     _sh.copytree(os.path.join(base, "labels"), label_store)
     _sh.copytree(os.path.join(base, "compidx"), comp_store)
 
@@ -22641,11 +22588,9 @@ def _seed_signature_store(
     band-signature store streaming_lsh_edge_ingest probes and
     maintains: (doc_id, band_idx, band_hash) rows for the BASE corpus,
     bucketed by the portable md5 bucket of band_hash through the
-    snapshot-store manifest protocol. Cache key = documents input
-    signature + n_buckets (the _seed_component_stores discipline); the
-    run works on a scratch COPY because the stream upserts batches."""
-    import hashlib
-    import json as _json
+    snapshot-store manifest protocol. Keyed on the documents input +
+    n_buckets (caching.fit_once); the run works on a scratch COPY
+    because the stream upserts batches."""
     import os
     import shutil as _sh
 
@@ -22654,48 +22599,18 @@ def _seed_signature_store(
         touched_buckets,
     )
 
-    sig_parts = [f"slei,v1,nb={n_buckets}"]
-    for path in sorted(_t(spark, sf_dir, "documents").inputFiles()):
-        if path.startswith("file:"):
-            local = path[len("file:"):]
-            try:
-                st = os.stat(local)
-                sig_parts.append(
-                    f"{local}:{st.st_size}:{st.st_mtime_ns}"
-                )
-            except OSError:
-                sig_parts.append(local)
-        else:
-            sig_parts.append(path)
-    key = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:16]
-    base = os.path.join("/tmp/ip_slei_cache", key)
-    done = os.path.join(base, "_DONE")
-    if not os.path.exists(done):
-        # atomic build: stage into a temp sibling and rename, so _DONE
-        # can never coexist with a partial bucket store (a crash
-        # mid-commit_buckets used to leave generations the rebuild
-        # could interleave with).
-        _t0 = time.time()
-        os.makedirs(os.path.dirname(base), exist_ok=True)
-        tmp = f"{base}.tmp{os.getpid()}"
-        _sh.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "sigstore"))
-        seed = base_bands.withColumn(
-            "bucket", _band_bucket(F.col("band_hash"), n_buckets)
-        )
+    def build(d: str) -> None:
+        bucket = _band_bucket(F.col("band_hash"), n_buckets)
+        seed = base_bands.withColumn("bucket", bucket)
+        os.makedirs(os.path.join(d, "sigstore"))
         commit_buckets(
-            os.path.join(tmp, "sigstore"),
-            seed,
-            touched_buckets(seed, _band_bucket(F.col("band_hash"), n_buckets)),
+            os.path.join(d, "sigstore"), seed, touched_buckets(seed, bucket)
         )
-        with open(os.path.join(tmp, "_DONE"), "w") as fh:
-            fh.write(_json.dumps({"n_buckets": n_buckets}))
-        _sh.rmtree(base, ignore_errors=True)  # pre-fix partial build
-        try:
-            os.rename(tmp, base)
-        except OSError:  # concurrent builder won the rename
-            _sh.rmtree(tmp, ignore_errors=True)
-        record_fit_build("/tmp/ip_slei_cache", time.time() - _t0)
+
+    base = fit_once(
+        "/tmp/ip_slei_cache", _t(spark, sf_dir, "documents"),
+        f"slei,nb={n_buckets}", build,
+    )
     _sh.copytree(os.path.join(base, "sigstore"), store)
 
 

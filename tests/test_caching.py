@@ -1,9 +1,15 @@
 """caching.py ownership contract: every persist in the package routes
 through track_persist, and the catalog wrapper + release_persisted
-leave no cached RDDs behind after queries are consumed."""
+leave no cached RDDs behind after queries are consumed. Also the
+fit-once on-disk store (fit_once): key, publish and failure rules."""
 
+import os
 import pathlib
 import re
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
 
 
 def _jids(spark):
@@ -189,3 +195,115 @@ def test_g9_substrates_equal_direct_derivation(spark):
         # session fixture even when an assertion above fails
         release_persisted()
         release_shared()
+
+
+class _Files:
+    """Stand-in for a DataFrame: fit_once reads only inputFiles()."""
+
+    def __init__(self, path):
+        self.path = path
+
+    def inputFiles(self):
+        return [f"file:{self.path}"]
+
+
+@pytest.fixture
+def inputs(tmp_path):
+    f = tmp_path / "part-0.parquet"
+    f.write_text("rows")
+    return _Files(f)
+
+
+def _writer(tag, calls):
+    def build(d):
+        calls.append(d)
+        with open(os.path.join(d, "artifact"), "w") as fh:
+            fh.write(tag)
+
+    return build
+
+
+def _artifact(d):
+    with open(os.path.join(d, "artifact")) as fh:
+        return fh.read()
+
+
+def test_fit_once_failed_build_leaves_nothing(tmp_path, inputs):
+    """A build that raises publishes nothing: no key directory, no
+    _DONE, no temp directory — the next call builds from scratch."""
+    from intelligencepipeline_spark.caching import fit_once
+
+    root = tmp_path / "cache"
+
+    def build(d):
+        open(os.path.join(d, "half-written"), "w").close()
+        raise RuntimeError("killed mid-build")
+
+    with pytest.raises(RuntimeError):
+        fit_once(str(root), inputs, "p", build)
+    assert list(root.iterdir()) == []
+    calls = []
+    d = fit_once(str(root), inputs, "p", _writer("a", calls))
+    assert len(calls) == 1 and _artifact(d) == "a"
+
+
+def test_fit_once_code_salt_change_rebuilds(tmp_path, inputs, monkeypatch):
+    """Edited package code (a new salt) never loads an index built by
+    the old code."""
+    from intelligencepipeline_spark import caching
+
+    root = str(tmp_path / "cache")
+    calls = []
+    monkeypatch.setattr(caching, "_code_salt", lambda: "code-v1")
+    old = caching.fit_once(root, inputs, "p", _writer("v1", calls))
+    monkeypatch.setattr(caching, "_code_salt", lambda: "code-v2")
+    new = caching.fit_once(root, inputs, "p", _writer("v2", calls))
+    assert len(calls) == 2 and old != new
+    assert (_artifact(old), _artifact(new)) == ("v1", "v2")
+
+
+def test_fit_once_concurrent_builds_publish_once(tmp_path, inputs):
+    """Builders racing on one key (all mid-build before any publishes,
+    more of them than cores): exactly one directory is published,
+    every caller gets it, and the losers' temp directories are gone."""
+    from intelligencepipeline_spark.caching import fit_once
+
+    root = tmp_path / "cache"
+    n = 6
+    barrier = threading.Barrier(n, timeout=60)
+
+    def build(d):
+        barrier.wait()
+        with open(os.path.join(d, "artifact"), "w") as fh:
+            fh.write(os.path.basename(d))
+
+    with ThreadPoolExecutor(n) as ex:
+        futs = [
+            ex.submit(fit_once, str(root), inputs, "p", build)
+            for _ in range(n)
+        ]
+        dirs = {f.result(timeout=120) for f in futs}
+    assert len(dirs) == 1
+    (d,) = dirs
+    assert [p.name for p in root.iterdir()] == [os.path.basename(d)]
+    assert sorted(os.listdir(d)) == ["_DONE", "artifact"]
+
+
+def test_fit_once_second_call_is_a_hit(tmp_path, inputs):
+    """A second call with the same params and inputs is a hit: no
+    build runs and none is recorded. Changing an input file is a
+    miss again."""
+    from intelligencepipeline_spark import caching
+
+    root = str(tmp_path / "cache")
+    calls = []
+    caching.reset_fit_builds()
+    first = caching.fit_once(root, inputs, "p", _writer("a", calls))
+    assert list(caching.fit_build_seconds()) == [root]
+    caching.reset_fit_builds()
+    assert caching.fit_once(root, inputs, "p", _writer("b", calls)) == first
+    assert len(calls) == 1 and caching.fit_build_seconds() == {}
+    inputs.path.write_text("more rows")
+    changed = caching.fit_once(root, inputs, "p", _writer("c", calls))
+    assert changed != first and _artifact(changed) == "c"
+    caching.reset_fit_builds()

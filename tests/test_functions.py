@@ -150,10 +150,13 @@ def test_cdc_chunk_rows_matches_expression(spark):
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
-    for df in (edge, docs):
+    # the key keeps its own type (not forced to long)
+    named = edge.selectExpr("concat('doc-', doc_id) AS name", "text")
+    for df, key in ((edge, "doc_id"), (docs, "doc_id"), (named, "name")):
         expr = df.select(
-            "doc_id", F.explode(cdc_chunks(F.col("text"))).alias("chunk")
+            key, F.explode(cdc_chunks(F.col("text"))).alias("chunk")
         )
-        vec = cdc_chunk_rows(df)
+        vec = cdc_chunk_rows(df, key=key)
+        assert vec.schema == expr.schema
         assert expr.exceptAll(vec).count() == 0
         assert vec.exceptAll(expr).count() == 0
