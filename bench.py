@@ -130,29 +130,24 @@ def main() -> None:
     # recorded number whenever the budget cutoff denies it a second
     # pass (python_datasource_feed read 2x for exactly this reason in
     # r09's grown catalog).
-    from intelligencepipeline_spark.scratch import scratch_dir as _sd
     from intelligencepipeline_spark.sources.pyfeed import register as _reg
+    from intelligencepipeline_spark.streaming import run_available_now
 
     _reg(spark)
     spark.read.format("docfeed").option("n_docs", 8).option(
         "n_partitions", 2
     ).load().write.mode("overwrite").format("noop").save()
-    _wq = (
+    # stopped and raised on a hang: a warm stream left running would
+    # skew every timed measurement it was added to stabilize
+    run_available_now(
         spark.readStream.format("docfeed")
         .option("n_docs", 8)
         .option("batch_size", 8)
         .load()
         .writeStream.outputMode("append")
-        .format("noop")
-        .option("checkpointLocation", _sd("ip_benchwarm_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .format("noop"),
+        "docfeed warm-up stream",
     )
-    if not _wq.awaitTermination(120):
-        # a hung warm stream left running would skew every timed
-        # measurement it was added to stabilize
-        _wq.stop()
-        raise RuntimeError("docfeed warm-up stream hung past 120 s")
 
     def run_one(name: str) -> float:
         t0 = time.time()

@@ -30,12 +30,15 @@ import functools
 import hashlib
 import os
 import pathlib
+import re
 import shutil
 import tempfile
 import time
 from typing import Callable, Hashable
 
 from pyspark.sql import DataFrame
+
+from intelligencepipeline_spark.scratch import pid_alive
 
 _TRACKED: list[DataFrame] = []
 _SHARED: dict[Hashable, DataFrame] = {}
@@ -145,12 +148,21 @@ def fit_once(
       path) and the package code salt;
     * hit — ``{root}/{key}/_DONE`` exists;
     * miss — ``build`` writes into a private ``{key}.tmp{pid}.*``
-      sibling, ``_DONE`` is written there, and the directory is renamed
-      into place, so ``_DONE`` never coexists with a partial build.
-      When a concurrent builder published first the rename fails, this
-      build is discarded and the winner's directory is returned. A
-      build that raises leaves nothing behind. Each miss's wall
-      seconds go to :func:`record_fit_build`.
+      sibling, ``_DONE`` (holding the code salt) is written there, and
+      the directory is renamed into place, so ``_DONE`` never coexists
+      with a partial build. When a concurrent builder published first
+      the rename fails, this build is discarded and the winner's
+      directory is returned. A build that raises leaves nothing
+      behind. Each miss's wall seconds go to :func:`record_fit_build`;
+    * prune — a miss that publishes removes the root's published
+      directories whose ``_DONE`` names another code salt (every key of
+      the current code stays, whatever its params or inputs) and the
+      temp directories of dead pids, never a live pid's. A published
+      one is first renamed to a temp name of this pid, so no reader
+      finds it half-removed.
+
+    One race remains: a process running older code can lose its
+    published directory mid-read.
     """
     sig = [params]
     for path in sorted(inputs.inputFiles()):
@@ -163,7 +175,8 @@ def fit_once(
                 sig.append(local)
         else:
             sig.append(path)
-    sig.append(_code_salt())
+    salt = _code_salt()
+    sig.append(salt)
     key = hashlib.md5("|".join(sig).encode()).hexdigest()[:16]
     final = os.path.join(root, key)
     if os.path.exists(os.path.join(final, "_DONE")):
@@ -174,7 +187,7 @@ def fit_once(
     try:
         build(tmp)
         with open(os.path.join(tmp, "_DONE"), "w") as fh:
-            fh.write(params)
+            fh.write(salt)
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
@@ -186,8 +199,38 @@ def fit_once(
         shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.exists(os.path.join(final, "_DONE")):
             raise
+    else:
+        _prune_superseded(root, salt)
     record_fit_build(root, time.time() - t0)
     return final
+
+
+# a fit_once temp directory: ``{key}.tmp{pid}.{suffix}``
+_TMP_PID = re.compile(r"\.tmp(\d+)\.")
+
+
+def _prune_superseded(root: str, salt: str) -> None:
+    """Remove what a fresh publish under code ``salt`` makes dead
+    weight in ``root`` (see :func:`fit_once`, "prune")."""
+    for name in os.listdir(root):
+        path = os.path.join(root, name)
+        m = _TMP_PID.search(name)
+        if m:
+            if not pid_alive(int(m.group(1))):
+                shutil.rmtree(path, ignore_errors=True)
+            continue
+        try:
+            with open(os.path.join(path, "_DONE")) as fh:
+                if fh.read() == salt:
+                    continue
+        except OSError:
+            continue
+        trash = f"{path}.tmp{os.getpid()}.old"
+        try:
+            os.rename(path, trash)
+        except OSError:
+            continue  # another pruner took it first
+        shutil.rmtree(trash, ignore_errors=True)
 
 
 def shared_fit(key: Hashable, builder: Callable[[], object]) -> object:

@@ -36,6 +36,8 @@ import shutil
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from intelligencepipeline_spark.session import conf_override
+
 
 def _delta_table(spark, path: str):
     """DeltaTable handle when delta is importable AND the path is a
@@ -374,13 +376,11 @@ def purge_key(
         # data files stay readable via time travel until vacuumed,
         # which defeats the GDPR contract (the snapshot-store path
         # collapses history via vacuum_snapshot for the same reason).
-        check_key = "spark.databricks.delta.retentionDurationCheck.enabled"
-        prev = spark.conf.get(check_key, "true")
-        try:
-            spark.conf.set(check_key, "false")
+        with conf_override(
+            spark,
+            {"spark.databricks.delta.retentionDurationCheck.enabled": "false"},
+        ):
             dt.vacuum(0)
-        finally:
-            spark.conf.set(check_key, prev)
         return stats
 
     if snapshot_exists(table_path):

@@ -23,7 +23,14 @@ from pyspark.sql import functions as F
 
 from intelligencepipeline_spark.caching import fit_once, track_persist
 from intelligencepipeline_spark.scratch import scratch_dir
-from intelligencepipeline_spark.session import MICROBATCH_SHUFFLE_PARTITIONS
+from intelligencepipeline_spark.session import (
+    MICROBATCH_SHUFFLE_PARTITIONS,
+    conf_override,
+)
+from intelligencepipeline_spark.streaming.bounded import (
+    await_available_now,
+    run_available_now,
+)
 from intelligencepipeline_spark.sources.tables import load_table
 from intelligencepipeline_spark.functions.text import (
     bpe_tokens,
@@ -1742,9 +1749,10 @@ def streaming_consolidation(spark: SparkSession, sf_dir: str) -> DataFrame:
     KafkaIntelligencePipeline.kt:364-382; here it's checked).
 
     Scale: complete-mode + memory sink is the TEST harness only; the
-    production path is consolidate_to_table's foreachBatch merge, which
-    keeps per-trigger state on disk. The fold itself (one keyed shuffle
-    with map-side partials) is identical in both.
+    production path is consolidate_to_bucketed_table's foreachBatch
+    merge into a manifest-committed bucketed snapshot on disk
+    (bucketed_snapshot_consolidation proves it). The fold itself (one
+    keyed shuffle with map-side partials) is identical in both.
 
     Perf note (r02 verdict item): the r01→r02 driver-bench move
     (1.64→2.31 s) is run-to-run variance in streaming-query startup
@@ -1784,15 +1792,12 @@ def streaming_consolidation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("meta_summary"),
         F.sum(cents).alias("total_value_cents"),
     )
-    q = (
+    run_available_now(
         agg.writeStream.outputMode("complete")
         .format("memory")
-        .queryName("streaming_consolidation_sink")
-        .option("checkpointLocation", scratch_dir("ip_sc_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        .queryName("streaming_consolidation_sink"),
+        "streaming consolidation",
     )
-    assert q.awaitTermination(300), "streaming consolidation did not finish"
     return spark.table("streaming_consolidation_sink").orderBy("key")
 
 
@@ -2756,29 +2761,20 @@ def streaming_backpressure_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("user_id").alias("min_user"),
         F.max("user_id").alias("max_user"),
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", MICROBATCH_SHUFFLE_PARTITIONS
-    )
-    try:
-        q = (
+    with conf_override(
+        spark, {"spark.sql.shuffle.partitions": MICROBATCH_SHUFFLE_PARTITIONS}
+    ):
+        q = run_available_now(
             agg.writeStream.outputMode("complete")
             .format("memory")
-            .queryName("streaming_backpressure_sink")
-            .option(
-                "checkpointLocation", scratch_dir("ip_bp_ck_")
-            )
-            .trigger(availableNow=True)
-            .start()
+            .queryName("streaming_backpressure_sink"),
+            "backpressure stream",
         )
-        assert q.awaitTermination(300), "backpressure stream hung"
         batches = [
             p["numInputRows"]
             for p in (q.recentProgress or [])
             if p["numInputRows"] > 0
         ]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     assert len(batches) >= 5, f"rate limit ignored: {batches}"
     assert max(batches) <= total / 2, f"unbounded batch: {batches}"
     return spark.table("streaming_backpressure_sink").orderBy("event_type")
@@ -3193,24 +3189,15 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("user_id").alias("min_user"),
         F.max("user_id").alias("max_user"),
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", MICROBATCH_SHUFFLE_PARTITIONS
-    )
-    try:
-        q = (
+    with conf_override(
+        spark, {"spark.sql.shuffle.partitions": MICROBATCH_SHUFFLE_PARTITIONS}
+    ):
+        run_available_now(
             agg.writeStream.outputMode("complete")
             .format("memory")
-            .queryName("streaming_static_join_sink")
-            .option(
-                "checkpointLocation", scratch_dir("ip_ssj_ck_")
-            )
-            .trigger(availableNow=True)
-            .start()
+            .queryName("streaming_static_join_sink"),
+            "stream-static join",
         )
-        assert q.awaitTermination(300), "stream-static join hung"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table("streaming_static_join_sink").orderBy("segment")
 
 
@@ -3945,15 +3932,12 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    q = (
+    run_available_now(
         agg.writeStream.outputMode("complete")
         .format("memory")
-        .queryName("streaming_session_windows_sink")
-        .option("checkpointLocation", scratch_dir("ip_ssw_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        .queryName("streaming_session_windows_sink"),
+        "streaming session windows",
     )
-    assert q.awaitTermination(300), "streaming session windows did not finish"
     return spark.table("streaming_session_windows_sink").orderBy(
         "user_id", "session_start_epoch"
     )
@@ -3989,26 +3973,17 @@ def streaming_stateful_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query's first start; 32 RocksDB/HDFS state partitions for a small
     # key space is pure setup overhead — scope it down for this query
     # (a real deployment sizes this to key-space/executor count).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # applyInPandasWithState does REAL per-group Python work over the
     # staged volume: the shuffle width IS the Python-worker
     # parallelism here, so this entry keeps the wider measured-best
     # width instead of the KB-scale micro-batch default.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
+        run_available_now(
             stats.writeStream.outputMode("update")
             .format("memory")
-            .queryName("streaming_stateful_stats_sink")
-            .option(
-                "checkpointLocation", scratch_dir("ip_sss_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
+            .queryName("streaming_stateful_stats_sink"),
+            "stateful streaming",
         )
-        assert q.awaitTermination(300), "stateful streaming did not finish"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.table("streaming_stateful_stats_sink")
         .select(
@@ -4269,9 +4244,10 @@ def engine_streaming_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out_dir = scratch_dir("ip_esr_out_")
     ckpt_dir = scratch_dir("ip_esr_ckpt_")
-    queries = eng.run_streaming(out_dir, ckpt_dir, trigger_available_now=True)
-    for q in queries:
-        assert q.awaitTermination(300), "engine streaming did not finish"
+    await_available_now(
+        "engine streaming",
+        *eng.run_streaming(out_dir, ckpt_dir, trigger_available_now=True),
+    )
     dr = spark.read.parquet(f"{out_dir}/datarecords")
 
     def meta_value(producer: str, key_: str):
@@ -4359,15 +4335,12 @@ def streaming_dedup_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = streaming_dedup_exact(
         ev, keys=["user_id", "event_type"], ts_col="ts", delay="10 minutes"
     )
-    q = (
+    run_available_now(
         deduped.writeStream.outputMode("append")
         .format("memory")
-        .queryName("streaming_dedup_proof_sink")
-        .option("checkpointLocation", scratch_dir("ip_sdp_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        .queryName("streaming_dedup_proof_sink"),
+        "streaming dedup",
     )
-    assert q.awaitTermination(300), "streaming dedup did not finish"
     return (
         spark.table("streaming_dedup_proof_sink")
         .groupBy("event_type")
@@ -5247,15 +5220,12 @@ def streaming_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id long, bucket long, v double"
     ).parquet(src)
     out = streaming_locf(stream, "user_id", "bucket", "v", step=3600)
-    q = (
+    run_available_now(
         out.writeStream.outputMode("append")
         .format("memory")
-        .queryName("streaming_gap_fill_sink")
-        .option("checkpointLocation", scratch_dir("ip_sgf_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        .queryName("streaming_gap_fill_sink"),
+        "streaming gap fill",
     )
-    assert q.awaitTermination(300), "streaming gap fill did not finish"
     return (
         spark.table("streaming_gap_fill_sink")
         .select(
@@ -6129,13 +6099,10 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         spark.read.parquet(src).schema
     ).option("maxFilesPerTrigger", 1).parquet(src)
-    q = (
-        sketch_partials_sink(stream, "event_type", "user_id", store)
-        .option("checkpointLocation", scratch_dir("ip_shll_ck_"))
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        sketch_partials_sink(stream, "event_type", "user_id", store),
+        "streaming hll",
     )
-    assert q.awaitTermination(300), "streaming hll did not finish"
     est = read_distinct_estimates(spark, store, "event_type")
     direct = raw.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_users"),
@@ -6235,24 +6202,15 @@ def streaming_watermark_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 32 state-store partitions for a ~150-key window space is pure
     # setup overhead — scope down (streaming_stateful_stats pattern)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", MICROBATCH_SHUFFLE_PARTITIONS
-    )
-    try:
-        q = (
+    with conf_override(
+        spark, {"spark.sql.shuffle.partitions": MICROBATCH_SHUFFLE_PARTITIONS}
+    ):
+        run_available_now(
             counts.writeStream.outputMode("append")
             .format("memory")
-            .queryName("streaming_wm_finalize_sink")
-            .option(
-                "checkpointLocation", scratch_dir("ip_swf_ck_")
-            )
-            .trigger(availableNow=True)
-            .start()
+            .queryName("streaming_wm_finalize_sink"),
+            "watermark finalize stream",
         )
-        assert q.awaitTermination(300), "watermark finalize stream hung"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.table("streaming_wm_finalize_sink")
         .select(
@@ -6307,14 +6265,12 @@ def streaming_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
         stream = spark.readStream.schema(
             spark.read.parquet(os.path.join(parts, "q0")).schema
         ).parquet(monitored)
-        q = (
+        run_available_now(
             stream.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("path", sink),
+            "restart proof stream",
+            checkpoint=ckpt,
         )
-        assert q.awaitTermination(300), "restart proof stream hung"
 
     _land(0)
     _land(1)
@@ -6518,8 +6474,6 @@ def streaming_join_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: the memory sink collects the joined rows only because
     the driver gate wants a DataFrame back; production would keep
     flowing. State is O(rows within watermark), not O(stream)."""
-    import os
-
     from intelligencepipeline_spark.streaming.pipeline import (
         stream_stream_chunk_join,
     )
@@ -6557,24 +6511,15 @@ def streaming_join_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.doc_id").alias("doc_id"), F.col("r.name").alias("name"),
         F.col("c.chunk_index").alias("chunk_index"),
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", MICROBATCH_SHUFFLE_PARTITIONS
-    )
-    try:
-        q = (
+    with conf_override(
+        spark, {"spark.sql.shuffle.partitions": MICROBATCH_SHUFFLE_PARTITIONS}
+    ):
+        run_available_now(
             joined.writeStream.outputMode("append")
             .format("memory")
-            .queryName("streaming_join_proof_sink")
-            .option(
-                "checkpointLocation", scratch_dir("ip_sjp_ck_")
-            )
-            .trigger(availableNow=True)
-            .start()
+            .queryName("streaming_join_proof_sink"),
+            "stream-stream join",
         )
-        assert q.awaitTermination(300), "stream-stream join hung"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.table("streaming_join_proof_sink")
         .groupBy("doc_id")
@@ -6857,22 +6802,13 @@ def streaming_outer_join_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.name").alias("name"),
         F.col("c.content").alias("content"),
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = (
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "2"}):
+        run_available_now(
             joined.writeStream.outputMode("append")
             .format("memory")
-            .queryName("streaming_outer_join_sink")
-            .option(
-                "checkpointLocation", scratch_dir("ip_soj_ck_")
-            )
-            .trigger(availableNow=True)
-            .start()
+            .queryName("streaming_outer_join_sink"),
+            "outer join stream",
         )
-        assert q.awaitTermination(300), "outer join stream hung"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.table("streaming_outer_join_sink")
         .filter(F.col("doc_id") >= 0)  # the tick's own row is harness
@@ -6914,15 +6850,12 @@ def python_datasource_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("batch_size", 150)
         .load()
     )
-    q = (
+    run_available_now(
         stream.writeStream.outputMode("append")
         .format("memory")
-        .queryName("python_datasource_feed_sink")
-        .option("checkpointLocation", scratch_dir("ip_pds_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .queryName("python_datasource_feed_sink"),
+        "python data source stream",
     )
-    assert q.awaitTermination(300), "python data source stream hung"
     streamed = spark.table("python_datasource_feed_sink").withColumn(
         "lane", F.lit("stream")
     )
@@ -7205,9 +7138,7 @@ def recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "events").filter(
         F.col("user_id") < 200
     ).createOrReplaceTempView("rcte_events_src")
-    prev = spark.conf.get("spark.sql.cteRecursionLevelLimit", None)
-    spark.conf.set("spark.sql.cteRecursionLevelLimit", "10000")
-    try:
+    with conf_override(spark, {"spark.sql.cteRecursionLevelLimit": "10000"}):
         # Materialize the recursion's STATIC side once: a CTE read
         # inside the recursive member is re-evaluated at EVERY level,
         # so with ev inline each of the 20 levels re-ran the scan +
@@ -7244,11 +7175,6 @@ def recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before the conf reset below (lazy plans would
         # otherwise resolve against the restored limit)
         out = out.localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.cteRecursionLevelLimit")
-        else:
-            spark.conf.set("spark.sql.cteRecursionLevelLimit", prev)
     return out.orderBy("user_id")
 
 
@@ -7677,7 +7603,7 @@ def bucketed_snapshot_consolidation(
             n_buckets=8,
             checkpoint=ckpt,
         )
-        assert q.awaitTermination(300), "bucketed merge run hung"
+        await_available_now("bucketed merge run", q)
 
     snap = read_bucketed_snapshot(spark, table)
     meta_str = F.transform(
@@ -7747,7 +7673,7 @@ def time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint=ckpt,
             keep_gens=2,
         )
-        assert q.awaitTermination(300), "time-travel merge run hung"
+        await_available_now("time-travel merge run", q)
         if h == 0:
             v1 = snapshot_versions(table)[-1]
 
@@ -8572,15 +8498,12 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
+    run_available_now(
         quantile_partials_sink(
             stream, "event_type", "event_id", "value", store, k=K
-        )
-        .option("checkpointLocation", scratch_dir("ip_sqs_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "streaming quantile sketch",
     )
-    assert q.awaitTermination(300), "streaming quantile sketch hung"
 
     merged = read_merged_quantile_sketch(spark, store, "event_type", k=K)
     n_partials = (
@@ -10714,16 +10637,13 @@ def streaming_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             index_dir
         )
 
-    q = (
+    run_available_now(
         spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_append)
-        .option("checkpointLocation", scratch_dir("ip_sivf_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_append),
+        "streaming ivfpq ingest",
     )
-    assert q.awaitTermination(300), "streaming ivfpq ingest hung"
 
     table = spark.read.parquet(index_dir).withColumn(
         "is_new", (F.col("vec_id") >= 250).cast("long")
@@ -11034,26 +10954,27 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lname, rname = f"t_li_{suffix}", f"t_ord_{suffix}"
     write_bucketed_table(li, lname, "orderkey", 8, path=f"{base}/li")
     write_bucketed_table(orders, rname, "orderkey", 8, path=f"{base}/ord")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join(spark, lname, rname, "orderkey")
-        shape = audit(joined)
-        assert shape.shuffle_exchanges == 0, shape.plan[:2000]
-        assert shape.sortmerge_joins == 1, shape.plan[:2000]
-        out = (
-            joined.groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("l_quantity").cast("long").alias("total_qty"),
-                F.countDistinct("orderkey").alias("n_orders"),
+        with conf_override(
+            spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+        ):
+            joined = bucketed_join(spark, lname, rname, "orderkey")
+            shape = audit(joined)
+            assert shape.shuffle_exchanges == 0, shape.plan[:2000]
+            assert shape.sortmerge_joins == 1, shape.plan[:2000]
+            out = (
+                joined.groupBy("o_orderpriority")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("l_quantity").cast("long").alias("total_qty"),
+                    F.countDistinct("orderkey").alias("n_orders"),
+                )
+                .orderBy("o_orderpriority")
             )
-            .orderBy("o_orderpriority")
-        )
-        # materialize under the no-broadcast conf, then drop the
-        # catalog entries (scratch data dies with the process)
-        return out.localCheckpoint(eager=True)
+            # materialize under the no-broadcast conf, then drop the
+            # catalog entries (scratch data dies with the process)
+            return out.localCheckpoint(eager=True)
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql(f"DROP TABLE IF EXISTS {lname}")
         spark.sql(f"DROP TABLE IF EXISTS {rname}")
 
@@ -11636,16 +11557,13 @@ def streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             "batch_id", F.lit(batch_id)
         ).coalesce(1).write.mode("append").parquet(store)
 
-    q = (
+    run_available_now(
         spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_write)
-        .option("checkpointLocation", scratch_dir("ip_sdrift_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_write),
+        "streaming drift monitor",
     )
-    assert q.awaitTermination(300), "streaming drift monitor hung"
 
     merged = (
         spark.read.parquet(store)
@@ -11712,7 +11630,6 @@ def aqe_skew_join_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     coalesce pass absorbs the read before skew detection. At 100 TB
     the defaults (256 MB threshold) fire without tuning — this entry
     is the contract, miniaturized. Confs are saved/restored."""
-    keep: dict[str, str | None] = {}
     confs = {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
@@ -11722,13 +11639,7 @@ def aqe_skew_join_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
     }
-    for k, v in confs.items():
-        try:
-            keep[k] = spark.conf.get(k)
-        except Exception:
-            keep[k] = None
-        spark.conf.set(k, v)
-    try:
+    with conf_override(spark, confs):
         left = spark.range(220000).select(
             F.when(F.col("id") < 200000, F.lit(0).cast("long"))
             .otherwise(F.col("id") % 97)
@@ -11749,12 +11660,6 @@ def aqe_skew_join_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         plan = out._jdf.queryExecution().executedPlan().toString()
         skew_split = "SortMergeJoin(skew=true)" in plan
         assert skew_split, plan[:1500]
-    finally:
-        for k, v in keep.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [(int(r["k"]), int(r["n_pairs"]), skew_split) for r in rows],
         "k long, n_pairs long, skew_split boolean",
@@ -11996,7 +11901,6 @@ def streaming_session_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("wmts", "0 seconds")
     )
     sess = _sttl(stream, "user_id", "es", GAP)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # applyInPandasWithState does REAL per-group Python work over the
     # staged volume: the shuffle width IS the Python-worker
     # parallelism here, so this entry derives a wider width from the
@@ -12004,19 +11908,13 @@ def streaming_session_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # because each extra partition also adds a state-store commit per
     # micro-batch (measured best 16 at 32 cores, 8 at 8 cores).
     _w = max(8, min(16, spark.sparkContext.defaultParallelism // 2))
-    spark.conf.set("spark.sql.shuffle.partitions", str(_w))
-    try:
-        q = (
+    with conf_override(spark, {"spark.sql.shuffle.partitions": str(_w)}):
+        run_available_now(
             sess.writeStream.outputMode("append")
             .format("memory")
-            .queryName("streaming_session_ttl_sink")
-            .option("checkpointLocation", scratch_dir("ip_sttl_ck_"))
-            .trigger(availableNow=True)
-            .start()
+            .queryName("streaming_session_ttl_sink"),
+            "session TTL stream",
         )
-        assert q.awaitTermination(300), "session TTL stream did not finish"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     out = spark.table("streaming_session_ttl_sink")
 
     # ---- in-entry lossless proof: closed U open == batch sessions ----
@@ -12490,16 +12388,13 @@ def streaming_postings_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket"
         ).parquet(index_dir)
 
-    q = (
+    run_available_now(
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_append)
-        .option("checkpointLocation", scratch_dir("ip_spost_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_append),
+        "streaming postings ingest",
     )
-    assert q.awaitTermination(300), "streaming postings ingest hung"
     assert len(batch_ids) == 2, batch_ids
 
     index = spark.read.parquet(index_dir)
@@ -13256,16 +13151,13 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(store)
 
-    q = (
+    run_available_now(
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_write)
-        .option("checkpointLocation", scratch_dir("ip_scms_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_write),
+        "streaming CMS build",
     )
-    assert q.awaitTermination(300), "streaming CMS build hung"
 
     merged = (
         spark.read.parquet(store)
@@ -13983,13 +13875,10 @@ def streaming_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "batch_id", F.lit(batch_id).cast("long")
         ).coalesce(1).write.mode("append").parquet(store)
 
-    q = (
-        observed.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", scratch_dir("ip_obs_ck_"))
-        .trigger(availableNow=True)
-        .start()
+    q = run_available_now(
+        observed.writeStream.foreachBatch(_write),
+        "observed-metrics stream",
     )
-    assert q.awaitTermination(300), "observed-metrics stream hung"
     import json as _json
 
     got = {}
@@ -15035,16 +14924,13 @@ def streaming_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             "batch_id", F.lit(batch_id)
         ).coalesce(1).write.mode("append").parquet(store)
 
-    q = (
+    run_available_now(
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_write)
-        .option("checkpointLocation", scratch_dir("ip_spk_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_write),
+        "streaming pass@k build",
     )
-    assert q.awaitTermination(300), "streaming pass@k build hung"
 
     merged = (
         spark.read.parquet(store)
@@ -16021,10 +15907,6 @@ def streaming_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup semantics."""
     import os
 
-    from intelligencepipeline_spark.operators.dedup import (
-        minhash_signatures_df,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     sh = _shared_shingles(spark, sf_dir, k=3)
     # identical default-parameter derivation as the shared substrate
@@ -16137,16 +16019,13 @@ def streaming_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).coalesce(1).write.mode("append").parquet(index_store)
 
-    q = (
+    run_available_now(
         spark.readStream.schema("doc_id long")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", scratch_dir("ip_adm_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_admit),
+        "admission stream",
     )
-    assert q.awaitTermination(300), "admission stream hung"
     out = spark.read.parquet(dec_store).select(
         "doc_id",
         "batch",
@@ -16813,16 +16692,13 @@ def streaming_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             " state_max_priority long",
         ).write.mode("append").parquet(log)
 
-    q = (
+    run_available_now(
         spark.readStream.schema("doc_id long, priority long, batch long")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", scratch_dir("ip_bk_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_fold),
+        "bottom-k stream",
     )
-    assert q.awaitTermination(300), "bottom-k stream hung"
     final = {
         (int(r["doc_id"]), int(r["priority"]))
         for r in spark.read.parquet(store).collect()
@@ -16945,8 +16821,6 @@ def state_store_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, so DuckDB derives it from ``events`` directly, with the
     metadata constants pinned (operator ``stateStoreSave``, 32 shuffle
     partitions, single AvailableNow batch 0)."""
-    import os
-
     events = load_table(spark, sf_dir, "events")
     keyed = events.select(
         (F.col("user_id") % 50).alias("k"),
@@ -16960,23 +16834,17 @@ def state_store_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at the query's FIRST run and the oracle pins 32 — do not inherit
     # the session value (SPARK_GRAFT_CPUS / conftest's 8), pin it
     # (same pattern as the other state-store entries)
-    keep_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        q = (
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "32"}):
+        run_available_now(
             spark.readStream.schema("k long, m long")
             .parquet(staged)
             .groupBy("k")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("m").alias("s"))
             .writeStream.outputMode("update")
-            .format("noop")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .format("noop"),
+            "state store reader stream",
+            checkpoint=ck,
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", keep_parts)
 
     state = spark.read.format("statestore").load(ck).select(
         F.col("key.k").alias("k"),
@@ -17035,7 +16903,6 @@ def python_stream_source_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``feed:i``), so DuckDB regenerates all 42 rows from
     ``generate_series`` and folds the same per-chunk ledger."""
     import hashlib
-    import os
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -17093,14 +16960,12 @@ def python_stream_source_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (and its Python planning round-trip) is built once, not per run.
     stream_df = spark.readStream.format("ip_feed15").load()
     for _ in range(total // chunk):
-        q = (
+        run_available_now(
             stream_df.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .option("path", out),
+            "python source resume run",
+            checkpoint=ck,
         )
-        q.awaitTermination()
     got = spark.read.parquet(out)
     # The no-dupes/no-gaps assert is folded into the returned aggregate:
     # groups partition rows by i DIV chunk, so sum(n_rows) == total and
@@ -17142,7 +17007,6 @@ def runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     free, declarative, no manual semi-join staging. Confs are
     saved/restored. Oracle: the join result itself (per-flag counts
     and exact decimal revenue), bloom flag pinned TRUE."""
-    keep: dict[str, str | None] = {}
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold":
@@ -17151,13 +17015,7 @@ def runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    for k, v in confs.items():
-        try:
-            keep[k] = spark.conf.get(k)
-        except Exception:
-            keep[k] = None
-        spark.conf.set(k, v)
-    try:
+    with conf_override(spark, confs):
         orders = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderstatus") == "F"
         )
@@ -17182,12 +17040,6 @@ def runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         plan = out._jdf.queryExecution().executedPlan().toString()
         bloom_pushed = "might_contain" in plan
         assert bloom_pushed, plan[:1500]
-    finally:
-        for k, v in keep.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [
             (str(r["l_returnflag"]), int(r["n_items"]),
@@ -17762,24 +17614,18 @@ def cbo_join_reorder_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: at 100 TB join order is the difference between shuffling
     the fact table once against a reduced key set and shuffling it
     raw — statistics make Catalyst choose right without hand-tuned
-    query rewrites. Confs and catalog tables are cleaned up in
-    ``finally``. Oracle: the BUILDING-segment aggregate, flags pinned
+    query rewrites. Confs are restored and catalog tables dropped on
+    exit. Oracle: the BUILDING-segment aggregate, flags pinned
     TRUE."""
     import uuid
 
     tag = uuid.uuid4().hex[:8]
     tl, to, tc = f"cbo_l_{tag}", f"cbo_o_{tag}", f"cbo_c_{tag}"
     base = scratch_dir("ip_cbo_tabs_")
-    keep: dict[str, str | None] = {}
     confs = {
         "spark.sql.cbo.enabled": "true",
         "spark.sql.cbo.joinReorder.enabled": "true",
     }
-    for k in confs:
-        try:
-            keep[k] = spark.conf.get(k)
-        except Exception:
-            keep[k] = None
     try:
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice"
@@ -17811,28 +17657,21 @@ def cbo_join_reorder_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _inner_pair(plan: str) -> tuple[int, int, int]:
             return (plan.index(tl), plan.index(to), plan.index(tc))
 
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        q = spark.sql(sql)
-        rows = q.collect()
-        p_cbo = q._jdf.queryExecution().optimizedPlan().toString()
-        il, io, ic = _inner_pair(p_cbo)
-        cbo_dims_first = io < il and ic < il
-        assert cbo_dims_first, p_cbo[:1500]
+        with conf_override(spark, confs):
+            q = spark.sql(sql)
+            rows = q.collect()
+            p_cbo = q._jdf.queryExecution().optimizedPlan().toString()
+            il, io, ic = _inner_pair(p_cbo)
+            cbo_dims_first = io < il and ic < il
+            assert cbo_dims_first, p_cbo[:1500]
 
-        spark.conf.set("spark.sql.cbo.enabled", "false")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-        p_heur = spark.sql(sql)._jdf.queryExecution().optimizedPlan(
-        ).toString()
-        hl, ho, hc = _inner_pair(p_heur)
-        heuristic_fact_first = hl < hc
-        assert heuristic_fact_first, p_heur[:1500]
+            with conf_override(spark, {k: "false" for k in confs}):
+                p_heur = spark.sql(sql)._jdf.queryExecution().optimizedPlan(
+                ).toString()
+            hl, ho, hc = _inner_pair(p_heur)
+            heuristic_fact_first = hl < hc
+            assert heuristic_fact_first, p_heur[:1500]
     finally:
-        for k, v in keep.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         for t in (tl, to, tc):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
     return spark.createDataFrame(
@@ -18678,18 +18517,13 @@ def rocksdb_state_provider_proof(
     larger than executor heap, incremental checkpointing); this entry
     is the engine-level attestation the streaming family runs
     unchanged on it. Oracle: the batch aggregate."""
-    keep = None
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
     rocks = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-    try:
-        keep = spark.conf.get(conf_key)
-    except Exception:
-        keep = None
-    spark.conf.set(conf_key, rocks)
-    try:
+    with conf_override(
+        spark, {"spark.sql.streaming.stateStore.providerClass": rocks}
+    ):
         events = load_table(spark, sf_dir, "events")
         keyed = events.select(
             (F.col("user_id") % 25).alias("k"),
@@ -18699,19 +18533,17 @@ def rocksdb_state_provider_proof(
         ck = scratch_dir("ip_rdb_ck_")
         out_dir = scratch_dir("ip_rdb_out_")
         keyed.coalesce(4).write.mode("overwrite").parquet(staged)
-        q = (
+        q = run_available_now(
             spark.readStream.schema("k long, m long")
             .parquet(staged)
             .groupBy("k")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("m").alias("s"))
             .writeStream.outputMode("complete")
             .format("memory")
-            .queryName("ip_rdb_sink")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .queryName("ip_rdb_sink"),
+            "rocksdb state stream",
+            checkpoint=ck,
         )
-        q.awaitTermination()
         prog = q.lastProgress
         ops = prog["stateOperators"]
         assert ops and any(
@@ -18742,11 +18574,6 @@ def rocksdb_state_provider_proof(
             )
             .orderBy("k")
         )
-    finally:
-        if keep is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, keep)
 
 
 def stream_source_archival_proof(
@@ -18801,7 +18628,7 @@ def stream_source_archival_proof(
     # archival runs a batch behind processing: keep restarting until
     # the landing dir drains (bounded — 3 data batches + cleanup laps)
     for _ in range(6):
-        q = (
+        run_available_now(
             spark.readStream.schema("event_id long, event_type string")
             .option("maxFilesPerTrigger", 1)
             .option("cleanSource", "archive")
@@ -18809,12 +18636,10 @@ def stream_source_archival_proof(
             .parquet(src)
             .withColumn("src_file", F.expr("input_file_name()"))
             .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .option("path", out_dir),
+            "archival stream",
+            checkpoint=ck,
         )
-        q.awaitTermination()
         if not [
             f_
             for f_ in os.listdir(src)
@@ -19334,8 +19159,6 @@ def streaming_union_watermark_min(
     Oracle: the union's per-window counts from ``events`` directly —
     complete drain makes finalization timing invisible to the
     VALUES, which is exactly the exactly-once contract."""
-    import os
-
     ev = load_table(spark, sf_dir, "events").select(
         F.col("event_id"),
         (F.col("user_id") % 10).alias("k"),
@@ -19369,19 +19192,17 @@ def streaming_union_watermark_min(
     )
     sa = spark.readStream.schema("k long, ts timestamp").parquet(a_dir)
     sb = spark.readStream.schema("k long, ts timestamp").parquet(b_dir)
-    q = (
+    run_available_now(
         sa.unionByName(sb)
         .withWatermark("ts", "10 seconds")
         .groupBy(F.window("ts", "100 seconds").alias("w"), "k")
         .agg(F.count(F.lit(1)).alias("n"))
         .writeStream.outputMode("append")
         .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", out_dir),
+        "union watermark stream",
+        checkpoint=ck,
     )
-    q.awaitTermination()
     got = spark.read.parquet(out_dir)
     return (
         got.filter(F.col("k") >= 0)
@@ -19676,7 +19497,7 @@ def late_data_drop_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dst = os.path.join(src, f"b{i}.parquet")
                 _sh.copyfile(os.path.join(d, f_), dst)
                 os.utime(dst, (1000000000 + i, 1000000000 + i))
-    q = (
+    q = run_available_now(
         spark.readStream.schema("k long, ts timestamp")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
@@ -19685,12 +19506,10 @@ def late_data_drop_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .writeStream.outputMode("append")
         .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", out_dir),
+        "late data stream",
+        checkpoint=ck,
     )
-    q.awaitTermination()
     wms = [
         (prog or {}).get("eventTime", {}).get("watermark")
         for prog in (q.recentProgress or [])
@@ -19735,18 +19554,11 @@ def aqe_coalesce_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuning; miniaturized thresholds are saved/restored.
 
     Oracle: the aggregate itself with both runtime facts pinned."""
-    keep: dict[str, str | None] = {}
     confs = {
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64MB",
     }
-    for k, v in confs.items():
-        try:
-            keep[k] = spark.conf.get(k)
-        except Exception:
-            keep[k] = None
-        spark.conf.set(k, v)
-    try:
+    with conf_override(spark, confs):
         out = (
             load_table(spark, sf_dir, "orders")
             .groupBy("o_orderpriority")
@@ -19766,12 +19578,6 @@ def aqe_coalesce_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert coalesced and n_parts < configured, (
             coalesced, n_parts, configured, plan[:600],
         )
-    finally:
-        for k, v in keep.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [
             (str(r["o_orderpriority"]), int(r["n_orders"]),
@@ -19795,7 +19601,6 @@ def aqe_join_switch_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     or impossible cardinality estimates.
 
     Oracle: the join aggregate with both plan facts pinned."""
-    keep: dict[str, str | None] = {}
     confs = {
         # static broadcast OFF entirely (deterministic at every SF:
         # the static plan is always SMJ); the ADAPTIVE threshold is
@@ -19803,13 +19608,7 @@ def aqe_join_switch_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "4MB",
     }
-    for k, v in confs.items():
-        try:
-            keep[k] = spark.conf.get(k)
-        except Exception:
-            keep[k] = None
-        spark.conf.set(k, v)
-    try:
+    with conf_override(spark, confs):
         # engine-generated inputs (the aqe_skew_join_proof pattern):
         # the replan decision depends on ABSOLUTE stage sizes, so the
         # entry must not shrink with sf_dir
@@ -19838,12 +19637,6 @@ def aqe_join_switch_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
             static_plan[:400],
             final_plan[:400],
         )
-    finally:
-        for k, v in keep.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [
             (int(r["bucket"]), int(r["n_rows"]), int(r["v_sum"]),
@@ -19872,14 +19665,9 @@ def dynamic_partition_overwrite(
     rewritten in place, the other 10 000 untouched. Conf is
     saved/restored. Oracle: month 3 from the corrected derivation,
     everything else from the original."""
-    keep = None
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    try:
-        keep = spark.conf.get(conf_key)
-    except Exception:
-        keep = None
-    spark.conf.set(conf_key, "dynamic")
-    try:
+    with conf_override(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         line = load_table(spark, sf_dir, "lineitem").select(
             F.month("l_shipdate").alias("m"),
             F.col("l_orderkey").alias("okey"),
@@ -19916,11 +19704,6 @@ def dynamic_partition_overwrite(
                 and r["qty_sum"] == exp_q
                 and r["key_sum"] == base[m]["s"]
             ), (m, r)
-    finally:
-        if keep is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, keep)
     return out.withColumn(
         "other_partitions_survived", F.lit(True)
     ).orderBy("m")
@@ -20040,7 +19823,7 @@ def streaming_query_listener_audit(
                     dst = os.path.join(src, f"b{b}.parquet")
                     _sh.copyfile(os.path.join(d, f_), dst)
                     os.utime(dst, (1000000000 + b, 1000000000 + b))
-        q = (
+        run_available_now(
             spark.readStream.schema("k long, m long")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
@@ -20048,12 +19831,10 @@ def streaming_query_listener_audit(
             .agg(F.count(F.lit(1)).alias("n"), F.sum("m").alias("s"))
             .writeStream.outputMode("complete")
             .format("memory")
-            .queryName("ip_listener_sink")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .queryName("ip_listener_sink"),
+            "listener audit stream",
+            checkpoint=ck,
         )
-        q.awaitTermination()
         # listener events are delivered asynchronously on the bus:
         # event-driven wait (set in onQueryProgress the moment the
         # staged count is reached) instead of the former 60 x 0.25 s
@@ -20243,16 +20024,13 @@ def streaming_decontamination_gate(
         ).coalesce(1).write.mode("append").parquet(dec_store)
         probe_ledger.append((int(bno), n_probed, 0))
 
-    q = (
+    run_available_now(
         spark.readStream.schema("doc_id long")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", scratch_dir("ip_sdecon_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_gate),
+        "decontamination stream",
     )
-    assert q.awaitTermination(300), "decontamination stream hung"
 
     out = spark.read.parquet(dec_store).select(
         "doc_id", "batch", "n_contaminated_grams", "kept"
@@ -20555,16 +20333,13 @@ def streaming_domain_quota_admission(
             F.count(F.lit(1)).cast("long").alias("spent")
         ).coalesce(1).write.mode("append").parquet(ledger)
 
-    q = (
+    run_available_now(
         spark.readStream.schema("doc_id long, source string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", scratch_dir("ip_quota_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_admit),
+        "quota stream",
     )
-    assert q.awaitTermination(300), "quota stream hung"
     out = spark.read.parquet(dec_store).select(
         "doc_id", "source", "batch", "admitted"
     )
@@ -20776,16 +20551,13 @@ def streaming_schema_drift_monitor(
             " AS coverage_milli",
         ).coalesce(1).write.mode("append").parquet(led)
 
-    q = (
+    run_available_now(
         spark.readStream.schema("event_id long, env string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_census)
-        .option("checkpointLocation", scratch_dir("ip_drift_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_census),
+        "drift stream",
     )
-    assert q.awaitTermination(300), "drift stream hung"
     out = spark.read.parquet(led).select(
         "batch",
         "field",
@@ -21980,16 +21752,13 @@ def streaming_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 1
             ).write.mode("append").parquet(out_dir)
 
-    q = (
+    run_available_now(
         spark.readStream.schema(queries_df.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_serve)
-        .option("checkpointLocation", scratch_dir("ip_sivfq_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_serve),
+        "streaming ivfpq probe",
     )
-    assert q.awaitTermination(300), "streaming ivfpq probe hung"
 
     return (
         spark.read.parquet(out_dir)
@@ -22288,9 +22057,6 @@ def incremental_components_merge(
     import os
     import shutil as _sh
 
-    from intelligencepipeline_spark.operators.components import (
-        connected_components,
-    )
     from intelligencepipeline_spark.operators.merge import merge_upsert
     from intelligencepipeline_spark.operators.snapshot_store import (
         commit_buckets,
@@ -22458,16 +22224,13 @@ def incremental_components_merge(
         commit_buckets(comp_store, merged, touched, drop_empty_touched=True)
         ledger.append((int(batch_id), len(pairs), n_nodes))
 
-    q = (
+    run_available_now(
         spark.readStream.schema("a long, b long")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", scratch_dir("ip_icm_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_merge),
+        "incremental components stream",
     )
-    assert q.awaitTermination(300), "incremental components stream hung"
 
     # Evaluated by both exceptAll directions and the returned join —
     # persist so the store read + proof run over one materialization
@@ -22856,16 +22619,13 @@ def streaming_lsh_edge_ingest(
         commit_buckets(store, kept.unionByName(new_rows), tb2)
         ledger.append((bno, n_ids, len(tb), n_cands, n_edges))
 
-    q = (
+    run_available_now(
         spark.readStream.schema("doc_id long")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", scratch_dir("ip_slei_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_ingest),
+        "lsh edge ingest stream",
     )
-    assert q.awaitTermination(300), "lsh edge ingest stream hung"
     assert len(ledger) == 2 and all(pruned_flags), (ledger, pruned_flags)
 
     # proof (a): base edges + emitted edges == one-shot batch edge set

@@ -26,12 +26,17 @@ import tempfile
 _ROOT: str | None = None
 
 
+def pid_alive(pid: int) -> bool:
+    """True while process ``pid`` exists on this host."""
+    return os.path.exists(f"/proc/{pid}")
+
+
 def _sweep_dead(base: str) -> None:
     try:
         for d in os.listdir(base):
             if not d.isdigit() or int(d) == os.getpid():
                 continue
-            if not os.path.exists(f"/proc/{d}"):
+            if not pid_alive(int(d)):
                 shutil.rmtree(os.path.join(base, d), ignore_errors=True)
     except OSError:
         pass

@@ -17,8 +17,10 @@ also make sense at that scale:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -168,3 +170,25 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
+
+
+@contextlib.contextmanager
+def conf_override(
+    spark: SparkSession, confs: dict[str, str]
+) -> Iterator[None]:
+    """Set the session confs ``confs`` for the body of a ``with`` block.
+    On exit, exceptions included, each key that had a value gets it
+    back and each key that had none ("not set" is a state of its own)
+    is unset again, so a value passed through ``get_spark(extra_conf=)``
+    is never replaced by a default."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

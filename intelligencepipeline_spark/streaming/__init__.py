@@ -1,7 +1,10 @@
+from intelligencepipeline_spark.streaming.bounded import (
+    await_available_now,
+    run_available_now,
+)
 from intelligencepipeline_spark.streaming.pipeline import (
     consolidate_stream,
     consolidate_to_bucketed_table,
-    consolidate_to_table,
     read_bucketed_snapshot,
     session_window_reassembly,
     snapshot_versions,
@@ -24,12 +27,13 @@ from intelligencepipeline_spark.streaming.stateful import (
 )
 
 __all__ = [
+    "await_available_now",
+    "run_available_now",
     "read_rollup",
     "rollup_cascade_sink",
     "streaming_rollup_finest",
     "consolidate_stream",
     "consolidate_to_bucketed_table",
-    "consolidate_to_table",
     "read_bucketed_snapshot",
     "session_window_reassembly",
     "snapshot_versions",

@@ -9,10 +9,11 @@ and 500 s session windows in its tests
 * ``consolidate_stream``       — update-mode keyed aggregation (the
   KTable); each micro-batch emits changed rows, exactly the changelog
   the reference replays to clients.
-* ``consolidate_to_table``     — foreachBatch MERGE into a parquet
-  snapshot table: at-least-once input + idempotent per-key merge =
-  effective exactly-once (fixing the reference's disabled
-  exactly-once, README.md:74).
+* ``consolidate_to_bucketed_table`` — foreachBatch merge into a
+  bucket-partitioned parquet snapshot published by manifest commit:
+  at-least-once input + idempotent per-key merge = effective
+  exactly-once (fixing the reference's disabled exactly-once,
+  README.md:74); ``read_bucketed_snapshot`` is its read path.
 * ``stream_stream_chunk_join`` — J1 with explicit watermarks (the
   reference has none; Spark requires them for state cleanup — at
   100 TB unbounded join state is a memory leak, so this is a fix, not
@@ -45,51 +46,6 @@ def consolidate_stream(events: DataFrame) -> DataFrame:
     so late or replayed events converge to the same row.
     """
     return consolidate_events(events, strict=False)
-
-
-def consolidate_to_table(
-    events: DataFrame,
-    table_path: str,
-    checkpoint: str | None = None,
-    trigger_available_now: bool = True,
-):
-    """foreachBatch merge of each micro-batch's fold into a parquet
-    snapshot at ``table_path`` (the `datarecord-consolidated` topic as a
-    queryable table — strictly more capable than the reference's
-    replay-only read path, SURVEY §3.3).
-
-    Merge = re-fold(existing ∪ batch-fold) per key; because the fold is
-    associative + commutative + idempotent this is an exact streaming
-    aggregation under at-least-once delivery. With Delta on the
-    classpath, replace the read/overwrite with ``MERGE INTO`` — the
-    logic is unchanged.
-
-    NOTE: this whole-table-rewrite variant is the didactic/test tier;
-    its final overwrite is not crash-atomic. The production path is
-    ``consolidate_to_bucketed_table`` (manifest commit: atomic publish,
-    crash-safe at any point, incremental per-bucket cost).
-    """
-    checkpoint = checkpoint or scratch_dir("ip_ckpt_")
-
-    def merge_batch(batch: DataFrame, _epoch: int) -> None:
-        spark = batch.sparkSession
-        folded = consolidate_events(batch, strict=False)
-        if os.path.exists(table_path):
-            existing = spark.read.parquet(table_path)
-            merged = _merge_folds(existing, folded)
-        else:
-            merged = folded
-        tmp = table_path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(table_path)
-
-    writer = events.writeStream.foreachBatch(merge_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --------------------------------------------------------------------

@@ -256,10 +256,11 @@ def test_fit_once_code_salt_change_rebuilds(tmp_path, inputs, monkeypatch):
     calls = []
     monkeypatch.setattr(caching, "_code_salt", lambda: "code-v1")
     old = caching.fit_once(root, inputs, "p", _writer("v1", calls))
+    assert _artifact(old) == "v1"
     monkeypatch.setattr(caching, "_code_salt", lambda: "code-v2")
     new = caching.fit_once(root, inputs, "p", _writer("v2", calls))
     assert len(calls) == 2 and old != new
-    assert (_artifact(old), _artifact(new)) == ("v1", "v2")
+    assert _artifact(new) == "v2"
 
 
 def test_fit_once_concurrent_builds_publish_once(tmp_path, inputs):
@@ -307,3 +308,83 @@ def test_fit_once_second_call_is_a_hit(tmp_path, inputs):
     changed = caching.fit_once(root, inputs, "p", _writer("c", calls))
     assert changed != first and _artifact(changed) == "c"
     caching.reset_fit_builds()
+
+
+def test_fit_once_new_salt_prunes_older_code_dir(
+    tmp_path, inputs, monkeypatch
+):
+    """A miss that publishes under a new code salt removes the root's
+    directory published by the older code."""
+    from intelligencepipeline_spark import caching
+
+    root = str(tmp_path / "cache")
+    calls = []
+    monkeypatch.setattr(caching, "_code_salt", lambda: "code-v1")
+    caching.fit_once(root, inputs, "p", _writer("v1", calls))
+    monkeypatch.setattr(caching, "_code_salt", lambda: "code-v2")
+    new = caching.fit_once(root, inputs, "p", _writer("v2", calls))
+    assert os.listdir(root) == [os.path.basename(new)]
+    assert _artifact(new) == "v2"
+
+
+def test_fit_once_same_salt_keys_survive_each_other(tmp_path, inputs):
+    """Keys of one code salt (other params, other inputs) are all live:
+    each publish leaves the others in place, so revisiting them in any
+    order is a hit."""
+    from intelligencepipeline_spark import caching
+
+    root = str(tmp_path / "cache")
+    calls = []
+    other = tmp_path / "part-1.parquet"
+    other.write_text("other rows")
+    keys = [("a", inputs), ("b", inputs), ("a", _Files(other))]
+    dirs = [
+        caching.fit_once(root, df, p, _writer(p, calls)) for p, df in keys
+    ]
+    assert len(calls) == 3 and len(set(dirs)) == 3
+    assert sorted(os.listdir(root)) == sorted(map(os.path.basename, dirs))
+    again = [
+        caching.fit_once(root, df, p, _writer("x", calls)) for p, df in keys
+    ]
+    assert again == dirs and len(calls) == 3
+
+
+def test_fit_once_hit_prunes_nothing(tmp_path, inputs, monkeypatch):
+    """A hit leaves every other directory of the root alone."""
+    from intelligencepipeline_spark import caching
+
+    root = str(tmp_path / "cache")
+    calls = []
+    monkeypatch.setattr(caching, "_code_salt", lambda: "code-v2")
+    new = caching.fit_once(root, inputs, "p", _writer("v2", calls))
+    # an older code's published dir appearing after the miss (another
+    # process publishing) must survive the hit below
+    stale = os.path.join(root, "0" * 16)
+    os.makedirs(stale)
+    with open(os.path.join(stale, "_DONE"), "w") as fh:
+        fh.write("code-v1")
+    dead_tmp = os.path.join(root, f"{'1' * 16}.tmp99999999.x")
+    os.makedirs(dead_tmp)
+    before = sorted(os.listdir(root))
+    assert caching.fit_once(root, inputs, "p", _writer("v3", calls)) == new
+    assert len(calls) == 1 and sorted(os.listdir(root)) == before
+
+
+def test_fit_once_prune_spares_live_pid_temp_dirs(tmp_path, inputs):
+    """A publish removes temp directories of dead builders (pid
+    99999999 is above any pid_max) but never a live builder's."""
+    from intelligencepipeline_spark.caching import fit_once
+
+    root = tmp_path / "cache"
+    root.mkdir()
+    live = root / f"{'a' * 16}.tmp{os.getpid()}.building"
+    dead = root / f"{'b' * 16}.tmp99999999.crashed"
+    for d in (live, dead):
+        d.mkdir()
+        (d / "half-written").write_text("x")
+    d = fit_once(str(root), inputs, "p", _writer("a", []))
+    assert sorted(p.name for p in root.iterdir()) == sorted(
+        [live.name, os.path.basename(d)]
+    )
+    assert (live / "half-written").read_text() == "x"
+

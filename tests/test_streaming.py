@@ -5,14 +5,20 @@ KafkaIntelligencePipelineTests.kt:378-404)."""
 
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from intelligencepipeline_spark.consolidate import consolidate_events
+from intelligencepipeline_spark.session import conf_override
 from intelligencepipeline_spark.streaming import (
+    await_available_now,
+    bounded,
     consolidate_stream,
-    consolidate_to_table,
+    consolidate_to_bucketed_table,
+    read_bucketed_snapshot,
+    run_available_now,
     session_window_reassembly,
 )
 
@@ -71,13 +77,72 @@ def test_update_mode_consolidation(spark, event_dir):
 def test_foreachbatch_snapshot_matches_batch_fold(spark, event_dir):
     table = tempfile.mkdtemp(prefix="ip_table_") + "/consolidated"
     ckpt = tempfile.mkdtemp(prefix="ip_ckpt_")
-    q = consolidate_to_table(read_stream(spark, event_dir), table, ckpt)
-    q.awaitTermination(120)
-    snap = spark.read.parquet(table)
+    q = consolidate_to_bucketed_table(
+        read_stream(spark, event_dir), table, checkpoint=ckpt
+    )
+    await_available_now("snapshot merge", q)
+    snap = read_bucketed_snapshot(spark, table).drop("bucket")
     batch = consolidate_events(make_events_df(spark), strict=False)
     s = {r["doc_id"]: r.asDict() for r in snap.collect()}
     b = {r["doc_id"]: r.asDict() for r in batch.collect()}
     assert s == b
+
+
+def _active_names(spark):
+    return {q.name for q in spark.streams.active}
+
+
+def test_bounded_run_past_timeout_is_stopped(spark, event_dir, monkeypatch):
+    monkeypatch.setattr(bounded, "TIMEOUT_S", 1)
+
+    def slow(_batch, _epoch):
+        time.sleep(4)
+
+    writer = (
+        read_stream(spark, event_dir)
+        .writeStream.foreachBatch(slow)
+        .queryName("ip_slow_bounded")
+    )
+    with pytest.raises(TimeoutError, match="slow sink"):
+        run_available_now(writer, "slow sink")
+    assert "ip_slow_bounded" not in _active_names(spark)
+
+
+def test_bounded_run_failure_propagates_and_stops(spark, event_dir):
+    def boom(_batch, _epoch):
+        raise ValueError("sink exploded")
+
+    writer = (
+        read_stream(spark, event_dir)
+        .writeStream.foreachBatch(boom)
+        .queryName("ip_failing_bounded")
+    )
+    with pytest.raises(Exception, match="sink exploded"):
+        run_available_now(writer, "failing sink")
+    assert "ip_failing_bounded" not in _active_names(spark)
+
+
+def test_conf_override_restores_set_and_unset_keys(spark):
+    was_set, was_unset = "spark.ip.test.was_set", "spark.ip.test.was_unset"
+    spark.conf.set(was_set, "before")
+    spark.conf.unset(was_unset)
+    override = {was_set: "inside", was_unset: "inside"}
+
+    def assert_restored():
+        assert spark.conf.get(was_set) == "before"
+        assert spark.conf.get(was_unset, None) is None
+
+    try:
+        with conf_override(spark, override):
+            assert spark.conf.get(was_set) == "inside"
+            assert spark.conf.get(was_unset) == "inside"
+        assert_restored()
+        with pytest.raises(RuntimeError, match="body failed"):
+            with conf_override(spark, override):
+                raise RuntimeError("body failed")
+        assert_restored()
+    finally:
+        spark.conf.unset(was_set)
 
 
 def test_session_window_reassembly(spark):
