@@ -30,6 +30,7 @@ from intelligencepipeline_spark.session import (
 from intelligencepipeline_spark.streaming.bounded import (
     await_available_now,
     run_available_now,
+    stage_batches,
 )
 from intelligencepipeline_spark.sources.tables import load_table
 from intelligencepipeline_spark.functions.text import (
@@ -6151,16 +6152,11 @@ def streaming_watermark_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, a leak of open windows would add rows, and any state loss
     would drop them."""
     import os
-    import shutil
 
     spark.conf.set(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
     raw = load_table(spark, sf_dir, "events")
-    src = scratch_dir("ip_swf_src_")
-    raw.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(src, "b1")
-    )
     # JVM-literal local relation (range+lits), NOT createDataFrame from
     # a Python list: the list path parallelizes into defaultParallelism
     # Python partitions, costing ~5 s of Python-worker round-trips per
@@ -6173,25 +6169,11 @@ def streaming_watermark_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0).cast("double").alias("value"),
         F.lit("{}").alias("props"),
     )
-    tick.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(src, "b2")
-    )
-    # batch order pinned by mtime (copies, not symlinks — the file
-    # lister stats the target): all data first, then the tick
-    flat = scratch_dir("ip_swf_flat_")
-    i = 0
-    for sub in ("b1", "b2"):
-        d = os.path.join(src, sub)
-        for f_ in sorted(os.listdir(d)):
-            if not f_.endswith(".parquet"):
-                continue
-            dst = os.path.join(flat, f"part{i}.parquet")
-            shutil.copyfile(os.path.join(d, f_), dst)
-            os.utime(dst, (1700000000 + 60 * i, 1700000000 + 60 * i))
-            i += 1
+    # two pinned micro-batches: all data first, then the tick
+    src = stage_batches([raw, tick])
     stream = spark.readStream.schema(
-        spark.read.parquet(os.path.join(src, "b1")).schema
-    ).option("maxFilesPerTrigger", 1).parquet(flat)
+        spark.read.parquet(os.path.join(src, "b0.parquet")).schema
+    ).option("maxFilesPerTrigger", 1).parquet(src)
     # watermarks require TIMESTAMP (ltz); the parquet round-trip
     # yields NTZ — identical instants under the pinned UTC session
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -6240,30 +6222,16 @@ def streaming_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
     test-only in the mechanism); offset log + idempotent sink is how
     a 1000-executor streaming job survives redeploys."""
     import os
-    import shutil
 
     raw = load_table(spark, sf_dir, "events")
-    parts = scratch_dir("ip_sre_parts_")
-    for i in range(4):
-        raw.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(parts, f"q{i}"))
-    monitored = scratch_dir("ip_sre_src_")
+    quarters = [raw.filter(F.col("event_id") % 4 == i) for i in range(4)]
+    monitored = stage_batches(quarters[:2])
     ckpt = scratch_dir("ip_sre_ck_")
     sink = scratch_dir("ip_sre_sink_")
 
-    def _land(i: int) -> None:
-        d = os.path.join(parts, f"q{i}")
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                shutil.copyfile(
-                    os.path.join(d, f_),
-                    os.path.join(monitored, f"file{i}.parquet"),
-                )
-
     def _run() -> None:
         stream = spark.readStream.schema(
-            spark.read.parquet(os.path.join(parts, "q0")).schema
+            spark.read.parquet(os.path.join(monitored, "b0.parquet")).schema
         ).parquet(monitored)
         run_available_now(
             stream.writeStream.format("parquet")
@@ -6272,11 +6240,8 @@ def streaming_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
             checkpoint=ckpt,
         )
 
-    _land(0)
-    _land(1)
     _run()  # run 1: files 0-1
-    _land(2)
-    _land(3)
+    stage_batches(quarters[2:], src=monitored, start=2)
     _run()  # run 2: SAME checkpoint — must pick up only files 2-3
     out = spark.read.parquet(sink)
     return (
@@ -6733,9 +6698,6 @@ def streaming_outer_join_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     technique). The oracle derives matched/unmatched from the parity
     rule — a join that dropped unmatched rows (inner semantics) or
     double-emitted them fails the row hash."""
-    import os
-    import shutil
-
     from intelligencepipeline_spark.streaming.pipeline import (
         stream_stream_chunk_join,
     )
@@ -6773,18 +6735,8 @@ def streaming_outer_join_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         tick_ts.alias("event_ts"),
     )
 
-    def _stage(df) -> str:
-        flat = scratch_dir("ip_soj_")
-        d = scratch_dir("ip_tmp_")
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                shutil.copyfile(
-                    os.path.join(d, f_), os.path.join(flat, "part0.parquet")
-                )
-        return flat
-    rdir = _stage(records.unionByName(r_tick))
-    cdir = _stage(chunks.unionByName(c_tick))
+    rdir = stage_batches([records.unionByName(r_tick)])
+    cdir = stage_batches([chunks.unionByName(c_tick)])
     r_stream = spark.readStream.schema(
         "doc_id long, name string, event_ts timestamp"
     ).parquet(rdir).withColumn(
@@ -7567,9 +7519,6 @@ def bucketed_snapshot_consolidation(
     Scale: per batch the merge touches only the batch's buckets
     (manifest-pruned read + new-gen write); the commit is one fsynced
     rename regardless of table size."""
-    import os
-    import shutil
-
     from intelligencepipeline_spark.streaming.pipeline import (
         consolidate_to_bucketed_table,
         read_bucketed_snapshot,
@@ -7578,25 +7527,14 @@ def bucketed_snapshot_consolidation(
     ev = load_table(spark, sf_dir, "events")
     mapped = _events_as_datarecord_events(ev)
     src = scratch_dir("ip_bsc_src_")
-    stage = scratch_dir("ip_bsc_stage_")
-    for h in (0, 1):
-        mapped.filter(F.col("half") == h).drop("half").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage, f"h{h}"))
     table = scratch_dir("ip_bsc_tab_") + "/t"
     ckpt = scratch_dir("ip_bsc_ck_")
     schema = mapped.drop("half").schema
 
-    def _land(h: int) -> None:
-        d = os.path.join(stage, f"h{h}")
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                shutil.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"h{h}.parquet")
-                )
-
     for h in (0, 1):  # two incremental runs, one checkpoint
-        _land(h)
+        stage_batches(
+            [mapped.filter(F.col("half") == h).drop("half")], src=src, start=h
+        )
         q = consolidate_to_bucketed_table(
             spark.readStream.schema(schema).parquet(src),
             table,
@@ -7639,9 +7577,6 @@ def time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: versioned manifests are O(buckets) JSON; retention cost is
     bounded by keep_gens; the diff itself is one full-outer join on
     doc_id of two manifest-pruned reads."""
-    import os
-    import shutil
-
     from intelligencepipeline_spark.streaming.pipeline import (
         consolidate_to_bucketed_table,
         read_bucketed_snapshot,
@@ -7651,21 +7586,13 @@ def time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     mapped = _events_as_datarecord_events(ev)
     src = scratch_dir("ip_ttd_src_")
-    stage = scratch_dir("ip_ttd_stage_")
-    for h in (0, 1):
-        mapped.filter(F.col("half") == h).drop("half").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage, f"h{h}"))
     table = scratch_dir("ip_ttd_tab_") + "/t"
     ckpt = scratch_dir("ip_ttd_ck_")
     schema = mapped.drop("half").schema
     for h in (0, 1):
-        d = os.path.join(stage, f"h{h}")
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                shutil.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"h{h}.parquet")
-                )
+        stage_batches(
+            [mapped.filter(F.col("half") == h).drop("half")], src=src, start=h
+        )
         q = consolidate_to_bucketed_table(
             spark.readStream.schema(schema).parquet(src),
             table,
@@ -8478,20 +8405,9 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     K = 128
     raw = load_table(spark, sf_dir, "events")
-    src = scratch_dir("ip_sqs_src_")
-    stage = scratch_dir("ip_sqs_stage_")
-    for b in range(4):
-        d = os.path.join(stage, f"b{b}")
-        raw.filter(F.col("event_id") % 4 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        import shutil as _sh
-
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                _sh.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"b{b}.parquet")
-                )
+    src = stage_batches(
+        raw.filter(F.col("event_id") % 4 == b) for b in range(4)
+    )
     store = os.path.join(scratch_dir("ip_sqs_store_"), "sk")
     stream = (
         spark.readStream.schema(raw.schema)
@@ -10583,7 +10499,6 @@ def streaming_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     TOUCHED cell partition; probe cost is partition-pruned reads of
     n_probe cells. State: the k_coarse*d + m*k_pq*d/m quantizer table."""
     import os
-    import shutil as _sh
 
     from intelligencepipeline_spark.operators.ivfpq import (
         ivfpq_append_integer,
@@ -10612,18 +10527,7 @@ def streaming_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell"
     ).parquet(index_dir)
 
-    src = scratch_dir("ip_sivf_src_")
-    stage = scratch_dir("ip_sivf_stage_")
-    for b in range(2):
-        d = os.path.join(stage, f"b{b}")
-        new.filter(F.col("vec_id") % 2 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                _sh.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"b{b}.parquet")
-                )
+    src = stage_batches(new.filter(F.col("vec_id") % 2 == b) for b in range(2))
     batch_ids: list[int] = []
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
@@ -11517,8 +11421,6 @@ def streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per batch one posexplode + keyed agg (512 groups); merge
     cost is independent of stream length after compaction."""
-    import os
-
     emb = _t(spark, sf_dir, "embeddings")
     qv = F.floor(F.col("v").cast("double") * 1000).cast("long")
 
@@ -11536,20 +11438,7 @@ def streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_hist = hist(emb.filter(F.col("vec_id") < 250))
     new = emb.filter(F.col("vec_id") >= 250)
 
-    src = scratch_dir("ip_sdrift_src_")
-    stage = scratch_dir("ip_sdrift_stage_")
-    import shutil as _sh
-
-    for b in range(3):
-        d = os.path.join(stage, f"b{b}")
-        new.filter(F.col("vec_id") % 3 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                _sh.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"b{b}.parquet")
-                )
+    src = stage_batches(new.filter(F.col("vec_id") % 3 == b) for b in range(3))
     store = scratch_dir("ip_sdrift_store_")
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
@@ -11859,9 +11748,6 @@ def streaming_session_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually fired. The oracle replays closed sessions relationally:
     non-last sessions are 'gap', last sessions with
     end + 500 < max(es) are 'ttl', open sessions withheld."""
-    import os
-    import shutil as _sh
-
     from intelligencepipeline_spark.streaming.stateful import (
         streaming_session_ttl as _sttl,
     )
@@ -11877,18 +11763,9 @@ def streaming_session_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm = ev.agg(F.min("es").alias("lo"), F.max("es").alias("hi")).collect()[0]
     t_mid = (int(mm["lo"]) + int(mm["hi"])) // 2
     hi = int(mm["hi"])
-    src = scratch_dir("ip_sttl_src_")
-    stage = scratch_dir("ip_sttl_stage_")
-    for i, cond in enumerate(
-        [F.col("es") <= t_mid, F.col("es") > t_mid]
-    ):
-        d = os.path.join(stage, f"b{i}")
-        ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                _sh.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"b{i}.parquet")
-                )
+    src = stage_batches(
+        [ev.filter(F.col("es") <= t_mid), ev.filter(F.col("es") > t_mid)]
+    )
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
@@ -12341,22 +12218,10 @@ def streaming_postings_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer file; the probe side prunes by bucket directory. The
     oracle recomputes the per-bucket stats relationally and pins
     lossless TRUE (the Spark-side assert fails the row first)."""
-    import os
-    import shutil as _sh
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = scratch_dir("ip_spost_src_")
-    stage = scratch_dir("ip_spost_stage_")
-    for b in range(2):
-        d = os.path.join(stage, f"b{b}")
-        docs.filter(F.col("doc_id") % 2 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                _sh.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"b{b}.parquet")
-                )
+    src = stage_batches(
+        docs.filter(F.col("doc_id") % 2 == b) for b in range(2)
+    )
     index_dir = scratch_dir("ip_spost_idx_")
 
     def _postings(df: DataFrame) -> DataFrame:
@@ -13114,9 +12979,6 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; store compaction is the same sum; probe side broadcasts the
     <=768-row sketch. State never holds raw tokens. Oracle replays
     exact counts, md5 cell addressing, and min-over-rows estimates."""
-    import os
-    import shutil as _sh
-
     from intelligencepipeline_spark.operators.cms import (
         cms_build,
         cms_estimate,
@@ -13130,18 +12992,9 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(tokens(normalize_text(F.col("text")))).alias("tok")
         )
 
-    src = scratch_dir("ip_scms_src_")
-    stage = scratch_dir("ip_scms_stage_")
-    for b in range(3):
-        d = os.path.join(stage, f"b{b}")
-        docs.filter(F.col("doc_id") % 3 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                _sh.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"b{b}.parquet")
-                )
+    src = stage_batches(
+        docs.filter(F.col("doc_id") % 3 == b) for b in range(3)
+    )
     store = scratch_dir("ip_scms_store_")
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
@@ -13825,9 +13678,6 @@ def streaming_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch plan — zero extra scans; metrics are exact integers
     (value pre-quantized to cents; no float sums cross the
     engine boundary). Oracle replays the batch split and metrics."""
-    import os
-    import shutil as _sh
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev = raw.select(
@@ -13839,18 +13689,7 @@ def streaming_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("props").isNull().alias("null_props"),
         (F.col("event_id") % 3).cast("long").alias("b"),
     )
-    src = scratch_dir("ip_obs_src_")
-    stage = scratch_dir("ip_obs_stage_")
-    for b in range(3):
-        d = os.path.join(stage, f"b{b}")
-        ev.filter(F.col("b") == b).drop("b").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                _sh.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"b{b}.parquet")
-                )
+    src = stage_batches(ev.filter(F.col("b") == b).drop("b") for b in range(3))
     store = scratch_dir("ip_obs_store_")
     schema = ev.drop("b").schema
 
@@ -14891,24 +14730,12 @@ def streaming_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by problems x batches; the estimator stays a per-row
     expression. Oracle replays the batch counts (partition => equal)
     and the ladders, lossless pinned TRUE."""
-    import os
-    import shutil as _sh
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    src = scratch_dir("ip_spk_src_")
-    stage = scratch_dir("ip_spk_stage_")
-    for b in range(3):
-        d = os.path.join(stage, f"b{b}")
-        ev.filter(F.col("event_id") % 3 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                _sh.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"b{b}.parquet")
-                )
+    src = stage_batches(
+        ev.filter(F.col("event_id") % 3 == b) for b in range(3)
+    )
     store = scratch_dir("ip_spk_store_")
 
     def _partials(df: DataFrame) -> DataFrame:
@@ -15905,8 +15732,6 @@ def streaming_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     cascades into the second step and breaks the hash. Reference
     parity: the idempotence guard (P2) upgraded from exact-key to
     near-dup semantics."""
-    import os
-
     docs = _t(spark, sf_dir, "documents")
     sh = _shared_shingles(spark, sf_dir, k=3)
     # identical default-parameter derivation as the shared substrate
@@ -15940,20 +15765,13 @@ def streaming_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands_of(sigs.join(docs.filter("doc_id % 3 = 0"), "doc_id", "leftsemi"))\
         .coalesce(1).write.mode("append").parquet(index_store)
 
-    src = scratch_dir("ip_adm_src_")
-    stage = scratch_dir("ip_adm_stage_")
-    import shutil as _sh
-
-    for b in (1, 2):
-        d = os.path.join(stage, f"b{b}")
-        docs.filter(F.col("doc_id") % 3 == b).select("doc_id").coalesce(
-            1
-        ).write.mode("overwrite").parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src, f"b{b}.parquet")
-                _sh.copyfile(os.path.join(d, f_), dst)
-                os.utime(dst, (1000000000 + b, 1000000000 + b))
+    src = stage_batches(
+        (
+            docs.filter(F.col("doc_id") % 3 == b).select("doc_id")
+            for b in (1, 2)
+        ),
+        start=1,
+    )
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         new_ids = batch_df.select("doc_id")
@@ -16622,22 +16440,9 @@ def streaming_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long").alias("priority"),
         (F.col("doc_id") % 3).cast("long").alias("batch"),
     )
-    src = scratch_dir("ip_bk_src_")
-    stage = scratch_dir("ip_bk_stage_")
+    src = stage_batches(pri.filter(F.col("batch") == b) for b in (0, 1, 2))
     store = scratch_dir("ip_bk_state_")
     log = scratch_dir("ip_bk_log_")
-    import shutil as _sh
-
-    for b in (0, 1, 2):
-        d = os.path.join(stage, f"b{b}")
-        pri.filter(F.col("batch") == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src, f"b{b}.parquet")
-                _sh.copyfile(os.path.join(d, f_), dst)
-                os.utime(dst, (1000000000 + b, 1000000000 + b))
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         rows = [
@@ -18596,35 +18401,16 @@ def stream_source_archival_proof(
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", (F.col("event_id") % 3).alias("b"), "event_type"
     )
-    src = scratch_dir("ip_arch_src_")
     archive = scratch_dir("ip_arch_dst_")
     ck = scratch_dir("ip_arch_ck_")
     out_dir = scratch_dir("ip_arch_out_")
-    import shutil as _sh
-
-    stage = scratch_dir("ip_arch_stage_")
-    for b in (0, 1, 2):
-        d = os.path.join(stage, f"b{b}")
-        ev.filter(F.col("b") == b).drop("b").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src, f"b{b}.parquet")
-                _sh.copyfile(os.path.join(d, f_), dst)
-                os.utime(dst, (1000000000 + b, 1000000000 + b))
+    src = stage_batches(
+        ev.filter(F.col("b") == b).drop("b") for b in (0, 1, 2)
+    )
     # archival fires when a LATER batch lists the log, so the last
     # data file needs a successor: a 0-row sentinel (same schema)
     # forces the final cleanup lap without touching the ledger
-    d = os.path.join(stage, "b3")
-    ev.filter(F.lit(False)).drop("b").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(d)
-    for f_ in sorted(os.listdir(d)):
-        if f_.endswith(".parquet"):
-            dst = os.path.join(src, "b3.parquet")
-            _sh.copyfile(os.path.join(d, f_), dst)
-            os.utime(dst, (1000000003, 1000000003))
+    stage_batches([ev.filter(F.lit(False)).drop("b")], src=src, start=3)
     # archival runs a batch behind processing: keep restarting until
     # the landing dir drains (bounded — 3 data batches + cleanup laps)
     for _ in range(6):
@@ -19454,18 +19240,13 @@ def late_data_drop_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: on-time per-window counts from ``events`` (sentinel and
     clock rows excluded by construction), flags pinned."""
-    import os
-
     ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 5).alias("k"),
         (F.col("event_id") % 100).cast("long").alias("sec"),
     )
     n_late = 7
-    src = scratch_dir("ip_late_src_")
-    stage = scratch_dir("ip_late_stage_")
     out_dir = scratch_dir("ip_late_out_")
     ck = scratch_dir("ip_late_ck_")
-    import shutil as _sh
 
     b1 = ev.select("k", F.timestamp_seconds(F.col("sec")).alias("ts"))
     clock = spark.range(1).select(
@@ -19487,16 +19268,9 @@ def late_data_drop_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(-1).cast("long").alias("k"),
         F.timestamp_seconds(F.lit(6000)).alias("ts"),
     )
-    for i, df in enumerate(
-        (b1.unionByName(clock), spacer, late.unionByName(flush))
-    ):
-        d = os.path.join(stage, f"b{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src, f"b{i}.parquet")
-                _sh.copyfile(os.path.join(d, f_), dst)
-                os.utime(dst, (1000000000 + i, 1000000000 + i))
+    src = stage_batches(
+        [b1.unionByName(clock), spacer, late.unionByName(flush)]
+    )
     q = run_available_now(
         spark.readStream.schema("k long, ts timestamp")
         .option("maxFilesPerTrigger", 1)
@@ -19775,8 +19549,6 @@ def streaming_query_listener_audit(
     SLAs export to metrics systems without polling every query.
 
     Oracle: the keyed aggregate; listener facts pinned."""
-    import os
-    import shutil as _sh
     import threading
 
     from pyspark.sql.streaming import StreamingQueryListener
@@ -19810,19 +19582,10 @@ def streaming_query_listener_audit(
         )
         n_staged = ev.count()
         target[0] = n_staged
-        src = scratch_dir("ip_sql_src_")
-        stage = scratch_dir("ip_sql_stage_")
         ck = scratch_dir("ip_sql_ck_")
-        for b in (0, 1, 2):
-            d = os.path.join(stage, f"b{b}")
-            ev.filter(F.col("b") == b).drop("b").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(d)
-            for f_ in sorted(os.listdir(d)):
-                if f_.endswith(".parquet"):
-                    dst = os.path.join(src, f"b{b}.parquet")
-                    _sh.copyfile(os.path.join(d, f_), dst)
-                    os.utime(dst, (1000000000 + b, 1000000000 + b))
+        src = stage_batches(
+            ev.filter(F.col("b") == b).drop("b") for b in (0, 1, 2)
+        )
         run_available_now(
             spark.readStream.schema("k long, m long")
             .option("maxFilesPerTrigger", 1)
@@ -19952,8 +19715,6 @@ def streaming_decontamination_gate(
     decontaminates a fresh CommonCrawl dump against frozen eval sets
     without re-reading 100 TB of history. Oracle replays the eval
     gram set, the parity batches and the per-doc hit counts."""
-    import os
-
     docs = _t(spark, sf_dir, "documents")
     toked = docs.select(
         "doc_id", tokens(normalize_text(F.col("text"))).alias("ts")
@@ -19985,21 +19746,8 @@ def streaming_decontamination_gate(
     ).distinct().coalesce(1).write.mode("overwrite").parquet(store)
 
     train = toked.join(eval_ids, "doc_id", "leftanti").select("doc_id")
-    src = scratch_dir("ip_sdecon_src_")
-    stage = scratch_dir("ip_sdecon_stage_")
+    src = stage_batches(train.filter(F.col("doc_id") % 2 == b) for b in (0, 1))
     dec_store = scratch_dir("ip_sdecon_dec_")
-    import shutil as _sh
-
-    for b in (0, 1):
-        d = os.path.join(stage, f"b{b}")
-        train.filter(F.col("doc_id") % 2 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src, f"b{b}.parquet")
-                _sh.copyfile(os.path.join(d, f_), dst)
-                os.utime(dst, (1000000000 + b, 1000000000 + b))
 
     probe_ledger: list[tuple[int, int, int]] = []
 
@@ -20282,27 +20030,12 @@ def streaming_domain_quota_admission(
     broadcast join against the ledger + a source-partitioned window
     over ITS OWN rows. Oracle replays the global admission order
     (batch, then doc_id) with one row_number per source."""
-    import os
-
     quota = 15
     docs = _t(spark, sf_dir, "documents")
     base = docs.select("doc_id", "source")
-    src = scratch_dir("ip_quota_src_")
-    stage = scratch_dir("ip_quota_stage_")
+    src = stage_batches(base.filter(F.col("doc_id") % 2 == b) for b in (0, 1))
     ledger = scratch_dir("ip_quota_ledger_")
     dec_store = scratch_dir("ip_quota_dec_")
-    import shutil as _sh
-
-    for b in (0, 1):
-        d = os.path.join(stage, f"b{b}")
-        base.filter(F.col("doc_id") % 2 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src, f"b{b}.parquet")
-                _sh.copyfile(os.path.join(d, f_), dst)
-                os.utime(dst, (1000000000 + b, 1000000000 + b))
     # seed the ledger (empty spend) so every batch reads the same shape
     spark.createDataFrame([], "source string, spent long").write.mode(
         "overwrite"
@@ -20495,8 +20228,6 @@ def streaming_schema_drift_monitor(
     producer rollout changed the wire schema before the warehouse
     does. Oracle replays the envelope construction, the parity
     batches and the key census."""
-    import os
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.expr(
@@ -20510,21 +20241,8 @@ def streaming_schema_drift_monitor(
             " '}')"
         ).alias("env"),
     )
-    src = scratch_dir("ip_drift_src_")
-    stage = scratch_dir("ip_drift_stage_")
+    src = stage_batches(ev.filter(F.col("event_id") % 2 == b) for b in (0, 1))
     led = scratch_dir("ip_drift_led_")
-    import shutil as _sh
-
-    for b in (0, 1):
-        d = os.path.join(stage, f"b{b}")
-        ev.filter(F.col("event_id") % 2 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src, f"b{b}.parquet")
-                _sh.copyfile(os.path.join(d, f_), dst)
-                os.utime(dst, (1000000000 + b, 1000000000 + b))
 
     registered = spark.createDataFrame(
         [("id",), ("type",), ("v",)], "field string"
@@ -21703,20 +21421,9 @@ def streaming_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(F.col("vec_id") < 4).select(
         "vec_id", "embedding"
     )
-    import shutil as _sh
-
-    src = scratch_dir("ip_sivfq_src_")
-    stage = scratch_dir("ip_sivfq_stage_")
-    for b in range(2):
-        d = os.path.join(stage, f"b{b}")
-        queries_df.filter(F.col("vec_id") % 2 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                _sh.copyfile(
-                    os.path.join(d, f_), os.path.join(src, f"b{b}.parquet")
-                )
+    src = stage_batches(
+        queries_df.filter(F.col("vec_id") % 2 == b) for b in range(2)
+    )
     out_dir = os.path.join(scratch_dir("ip_sivfq_out_"), "hits")
     batch_ids: list[int] = []
     pruned_flags: list[bool] = []
@@ -22055,7 +21762,6 @@ def incremental_components_merge(
     data-proportional work is one broadcast remap of affected
     members and O(touched-bucket) I/O."""
     import os
-    import shutil as _sh
 
     from intelligencepipeline_spark.operators.merge import merge_upsert
     from intelligencepipeline_spark.operators.snapshot_store import (
@@ -22108,18 +21814,9 @@ def incremental_components_merge(
     new_edges = track_persist(pair_edges.unionByName(bridges))
     n_new_edges = new_edges.count()
 
-    src = scratch_dir("ip_icm_src_")
-    stage = scratch_dir("ip_icm_stage_")
-    for b in (0, 1):
-        d = os.path.join(stage, f"b{b}")
-        new_edges.filter(F.col("batch") == b).select("a", "b").coalesce(
-            1
-        ).write.mode("overwrite").parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src, f"b{b}.parquet")
-                _sh.copyfile(os.path.join(d, f_), dst)
-                os.utime(dst, (1000000000 + b, 1000000000 + b))
+    src = stage_batches(
+        new_edges.filter(F.col("batch") == b).select("a", "b") for b in (0, 1)
+    )
 
     node_bucket = F.pmod(F.xxhash64(F.col("node")), F.lit(NB))
     ledger: list[tuple[int, int, int]] = []
@@ -22461,7 +22158,6 @@ def streaming_lsh_edge_ingest(
     manifest commits + per-batch verification micro-jobs; the seeded
     store is fit-once cached and copied per run."""
     import os
-    import shutil as _sh
 
     from intelligencepipeline_spark.operators.snapshot_store import (
         commit_buckets,
@@ -22498,18 +22194,9 @@ def streaming_lsh_edge_ingest(
     _seed_signature_store(spark, sf_dir, _band_rows(base_sigs), store, NB)
 
     # two deterministic micro-batches of arriving doc ids
-    src = scratch_dir("ip_slei_src_")
-    stage = scratch_dir("ip_slei_stage_")
-    for b in (0, 1):
-        d = os.path.join(stage, f"b{b}")
-        arriving.filter(F.col("doc_id") % 2 == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src, f"b{b}.parquet")
-                _sh.copyfile(os.path.join(d, f_), dst)
-                os.utime(dst, (1000000000 + b, 1000000000 + b))
+    src = stage_batches(
+        arriving.filter(F.col("doc_id") % 2 == b) for b in (0, 1)
+    )
 
     edge_log = scratch_dir("ip_slei_edges_")
     ledger: list[tuple[int, int, int, int, int]] = []

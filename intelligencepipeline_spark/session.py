@@ -24,6 +24,8 @@ from typing import Iterator
 
 from pyspark.sql import SparkSession
 
+from intelligencepipeline_spark.scratch import scratch_root
+
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # Non-AQE shuffle width — in this engine that is effectively the
@@ -58,14 +60,13 @@ def _ship_package(spark: SparkSession) -> None:
     the package via ``addPyFile`` puts it on every worker's
     ``sys.path`` (Spark distributes it and prepends the download dir),
     which is exactly how a 1000-executor cluster would receive it.
+    The zip lives in this process's scratch root, removed at exit.
     """
     sc = spark.sparkContext
     if getattr(sc, "_ip_spark_pkg_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"ip_spark_pkg_{os.getpid()}.zip"
-    )
+    zip_path = os.path.join(scratch_root(), f"ip_spark_pkg_{os.getpid()}.zip")
     if not os.path.exists(zip_path):
         import zipfile
 

@@ -1,6 +1,7 @@
 from intelligencepipeline_spark.streaming.bounded import (
     await_available_now,
     run_available_now,
+    stage_batches,
 )
 from intelligencepipeline_spark.streaming.pipeline import (
     consolidate_stream,
@@ -29,6 +30,7 @@ from intelligencepipeline_spark.streaming.stateful import (
 __all__ = [
     "await_available_now",
     "run_available_now",
+    "stage_batches",
     "read_rollup",
     "rollup_cascade_sink",
     "streaming_rollup_finest",

@@ -87,9 +87,8 @@ def consolidate_to_bucketed_table(
     keep_gens: int = 1,
 ):
     """Incremental foreachBatch merge into a BUCKET-PARTITIONED parquet
-    snapshot — the 100 TB version of ``consolidate_to_table`` (which
-    rewrites the whole table every batch; fine for tests, wrong at
-    scale).
+    snapshot: each batch rewrites only the buckets it touches, never
+    the whole table.
 
     Layout: ``table_path/bucket=<pmod(doc_id, n_buckets)>/gen=<g>/``
     with a manifest naming each bucket's current gen (see the commit

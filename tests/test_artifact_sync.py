@@ -102,9 +102,10 @@ def test_no_hand_rolled_stream_or_conf_scaffold():
     """Bounded streams run through streaming.run_available_now /
     await_available_now (which stop a query that hangs or fails) and
     temporary session confs through session.conf_override (which
-    restores set keys and unsets the rest). No hand-rolled copy may
-    come back in the catalog or the bench; queries.py reads a conf
-    only at its two read-only sites."""
+    restores set keys and unsets the rest), and file-stream batches
+    are landed by streaming.stage_batches (one write, pinned order).
+    No hand-rolled copy may come back in the catalog or the bench;
+    queries.py reads a conf only at its two read-only sites."""
     def source(rel):
         with open(os.path.join(REPO, rel)) as fh:
             return fh.read()
@@ -114,6 +115,8 @@ def test_no_hand_rolled_stream_or_conf_scaffold():
         assert "availableNow=True" not in src, rel
         assert "awaitTermination(" not in src, rel
     src = source("intelligencepipeline_spark/queries.py")
+    assert "copyfile(" not in src
+    assert "os.utime(" not in src
     keys = re.findall(r'spark\.conf\.get\(\s*"([^"]+)"', src)
     assert src.count("spark.conf.get(") == len(keys) == 2, keys
     assert sorted(keys) == [

@@ -212,10 +212,8 @@ def test_streaming_rate_limit_equals_batch_fold(spark):
     """The stateful token bucket across THREE micro-batches equals the
     batch recurrence replayed in one pass (same cap/rate/cost), state
     carrying tokens/last/accepted between batches."""
-    import os
-    import shutil
-    import tempfile
-
+    from intelligencepipeline_spark.scratch import scratch_dir
+    from intelligencepipeline_spark.streaming import stage_batches
     from intelligencepipeline_spark.streaming.stateful import (
         streaming_rate_limit,
     )
@@ -244,20 +242,12 @@ def test_streaming_rate_limit_equals_batch_fold(spark):
             out[k] = (len(evs), acc, tokens)
         return out
 
-    src = tempfile.mkdtemp(prefix="ip_srl_")
     df = spark.createDataFrame(rows, "user_id long, es long, event_id long")
     # three time-ordered files -> three micro-batches (maxFilesPerTrigger=1)
-    stage = tempfile.mkdtemp()
     cuts = [(0, 3), (3, 1200), (1200, 10**9)]
-    for j, (lo, hi) in enumerate(cuts):
-        part = df.filter((df.es >= lo) & (df.es < hi))
-        d = os.path.join(stage, f"b{j}")
-        part.coalesce(1).write.mode("overwrite").parquet(d)
-        for f_ in sorted(os.listdir(d)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src, f"f{j}.parquet")
-                shutil.copyfile(os.path.join(d, f_), dst)
-                os.utime(dst, (1700000000 + 60 * j,) * 2)
+    src = stage_batches(
+        df.filter((df.es >= lo) & (df.es < hi)) for lo, hi in cuts
+    )
 
     stream = (
         spark.readStream.schema("user_id long, es long, event_id long")
@@ -271,7 +261,7 @@ def test_streaming_rate_limit_equals_batch_fold(spark):
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("srl_sink")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", scratch_dir("ip_ck_"))
         .trigger(availableNow=True)
         .start()
     )

@@ -3,6 +3,7 @@ session-window reassembly, foreachBatch snapshot merge, convergence with
 the batch fold (the reference's predicate-counting integration style,
 KafkaIntelligencePipelineTests.kt:378-404)."""
 
+import os
 import shutil
 import tempfile
 import time
@@ -20,6 +21,7 @@ from intelligencepipeline_spark.streaming import (
     read_bucketed_snapshot,
     run_available_now,
     session_window_reassembly,
+    stage_batches,
 )
 
 EVENT_SCHEMA_STR = (
@@ -74,9 +76,9 @@ def test_update_mode_consolidation(spark, event_dir):
     assert len(out[2]["meta"]) == 1  # set-union dedup survived streaming
 
 
-def test_foreachbatch_snapshot_matches_batch_fold(spark, event_dir):
-    table = tempfile.mkdtemp(prefix="ip_table_") + "/consolidated"
-    ckpt = tempfile.mkdtemp(prefix="ip_ckpt_")
+def test_foreachbatch_snapshot_matches_batch_fold(spark, event_dir, tmp_path):
+    table = str(tmp_path / "consolidated")
+    ckpt = str(tmp_path / "ckpt")
     q = consolidate_to_bucketed_table(
         read_stream(spark, event_dir), table, checkpoint=ckpt
     )
@@ -145,6 +147,68 @@ def test_conf_override_restores_set_and_unset_keys(spark):
         spark.conf.unset(was_set)
 
 
+def _one_row(spark, v):
+    return spark.range(1).select(F.lit(v).cast("long").alias("v"))
+
+
+def _feed_batches(spark, src, checkpoint=None):
+    """(batch_id, sorted v) per micro-batch of a maxFilesPerTrigger=1
+    AvailableNow stream over ``src``."""
+    seen = []
+
+    def log(df, batch_id):
+        seen.append((batch_id, sorted(r.v for r in df.collect())))
+
+    run_available_now(
+        spark.readStream.schema("v long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(log),
+        "staged feed",
+        checkpoint=checkpoint,
+    )
+    return seen
+
+
+def test_stage_batches_pins_batch_order(spark):
+    """Batch n is micro-batch n: two frames staged back to back, and a
+    batch 0 landed after batch 1, are both read in batch order. A file
+    stream orders by mtime, and on tmpfs it reads a tie newest first."""
+    frames = [_one_row(spark, 0), _one_row(spark, 1)]
+    assert _feed_batches(spark, stage_batches(frames)) == [(0, [0]), (1, [1])]
+    src = stage_batches(frames[1:], start=1)
+    stage_batches(frames[:1], src=src)
+    assert _feed_batches(spark, src) == [(0, [0]), (1, [1])]
+
+
+def test_stage_batches_lands_exactly_one_file(spark):
+    """A 0-row frame still lands as one readable file; a write that
+    splits into two part files raises rather than drop one of them,
+    and leaves nothing behind."""
+    src = stage_batches([spark.range(0).select(F.col("id").alias("v"))])
+    assert os.listdir(src) == ["b0.parquet"]
+    empty = spark.read.parquet(os.path.join(src, "b0.parquet"))
+    assert empty.columns == ["v"] and empty.count() == 0
+
+    split = spark.range(2).select(F.col("id").alias("v"))
+    with conf_override(spark, {"spark.sql.files.maxRecordsPerFile": "1"}):
+        with pytest.raises(RuntimeError, match="one part file"):
+            stage_batches([split], src=src, start=1)
+    assert os.listdir(src) == ["b0.parquet"]
+
+
+def test_stage_batches_start_feeds_a_resumed_checkpoint(spark, tmp_path):
+    """``start=`` continues the numbering in an existing ``src``, and a
+    run resumed from the first run's checkpoint reads only the new
+    file."""
+    ckpt = str(tmp_path / "ckpt")
+    src = stage_batches([_one_row(spark, 0)])
+    assert _feed_batches(spark, src, ckpt) == [(0, [0])]
+    stage_batches([_one_row(spark, 1)], src=src, start=1)
+    assert sorted(os.listdir(src)) == ["b0.parquet", "b1.parquet"]
+    assert _feed_batches(spark, src, ckpt) == [(1, [1])]
+
+
 def test_session_window_reassembly(spark):
     chunks = spark.createDataFrame(
         [
@@ -178,7 +242,7 @@ def test_session_window_reassembly(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_bucketed_snapshot_incremental_merge(spark, event_dir):
+def test_bucketed_snapshot_incremental_merge(spark, event_dir, tmp_path):
     """Two sequential micro-batch runs (new events arrive between them)
     converge the bucketed snapshot to the full batch fold, and the
     snapshot is physically bucket-partitioned."""
@@ -189,8 +253,8 @@ def test_bucketed_snapshot_incremental_merge(spark, event_dir):
         read_bucketed_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="ip_btable_") + "/consolidated"
-    ckpt = tempfile.mkdtemp(prefix="ip_bckpt_")
+    table = str(tmp_path / "consolidated")
+    ckpt = str(tmp_path / "ckpt")
 
     q = consolidate_to_bucketed_table(
         read_stream(spark, event_dir), table, n_buckets=4, checkpoint=ckpt
@@ -227,7 +291,9 @@ def test_bucketed_snapshot_incremental_merge(spark, event_dir):
     assert s[9]["name"] == "/z"
 
 
-def test_bucketed_snapshot_crash_between_write_and_publish(spark, event_dir):
+def test_bucketed_snapshot_crash_between_write_and_publish(
+    spark, event_dir, tmp_path
+):
     """Kill-between-read-and-overwrite safety: a merge attempt that
     dies AFTER writing its new gen dirs but BEFORE publishing the
     manifest leaves readers on the exact pre-batch snapshot; a retry
@@ -241,8 +307,8 @@ def test_bucketed_snapshot_crash_between_write_and_publish(spark, event_dir):
         read_bucketed_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="ip_btable_crash_") + "/consolidated"
-    ckpt = tempfile.mkdtemp(prefix="ip_bckpt_crash_")
+    table = str(tmp_path / "consolidated")
+    ckpt = str(tmp_path / "ckpt")
     q = consolidate_to_bucketed_table(
         read_stream(spark, event_dir), table, n_buckets=4, checkpoint=ckpt
     )
@@ -301,7 +367,7 @@ def test_bucketed_snapshot_crash_between_write_and_publish(spark, event_dir):
     )
 
 
-def test_bucketed_snapshot_time_travel_and_vacuum(spark, event_dir):
+def test_bucketed_snapshot_time_travel_and_vacuum(spark, event_dir, tmp_path):
     """keep_gens=3: every commit's full bucket map is retained as an
     immutable version manifest — read_bucketed_snapshot(version=v)
     reproduces the exact post-commit-v state; vacuum_bucketed_snapshot
@@ -315,8 +381,8 @@ def test_bucketed_snapshot_time_travel_and_vacuum(spark, event_dir):
         vacuum_bucketed_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="ip_btable_tt_") + "/consolidated"
-    ckpt = tempfile.mkdtemp(prefix="ip_bckpt_tt_")
+    table = str(tmp_path / "consolidated")
+    ckpt = str(tmp_path / "ckpt")
     q = consolidate_to_bucketed_table(
         read_stream(spark, event_dir), table, n_buckets=4,
         checkpoint=ckpt, keep_gens=3,

@@ -7,25 +7,20 @@ exactly once. If an upgrade changes either fact, these tests fail and
 the finalize proof's docstring needs re-deriving."""
 
 import datetime as dt
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
+
+from intelligencepipeline_spark.scratch import scratch_dir
+from intelligencepipeline_spark.streaming import stage_batches
 
 T = dt.datetime
 
 
 def _staged_stream(spark, batches):
-    flat = tempfile.mkdtemp(prefix="wmprobe_")
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "ts timestamp, k string")
-        d = tempfile.mkdtemp()
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-        dst = os.path.join(flat, f"p{i}.parquet")
-        shutil.copyfile(os.path.join(d, f), dst)
-        os.utime(dst, (1700000000 + 60 * i, 1700000000 + 60 * i))
+    flat = stage_batches(
+        spark.createDataFrame(rows, "ts timestamp, k string")
+        for rows in batches
+    )
     return (
         spark.readStream.schema("ts timestamp, k string")
         .option("maxFilesPerTrigger", 1)
@@ -51,7 +46,7 @@ def test_late_rows_merge_and_window_emits_once(spark):
         counts.writeStream.outputMode("append")
         .format("memory")
         .queryName("wmprobe_sink")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", scratch_dir("ip_ck_"))
         .trigger(availableNow=True)
         .start()
     )

@@ -13,6 +13,7 @@ import os
 import subprocess
 import sys
 
+from intelligencepipeline_spark.scratch import scratch_root
 from intelligencepipeline_spark.session import _ship_package
 
 
@@ -24,6 +25,13 @@ def test_package_zip_is_shipped(spark):
     assert any(zip_name in p for p in sc._python_includes)
     # idempotent: a second call must not re-add or raise
     _ship_package(spark)
+
+
+def test_package_zip_lies_under_scratch_root(spark):
+    """The shipped zip is built in the per-process scratch root, which
+    is removed at exit, not left in the temp dir for good."""
+    zip_name = f"ip_spark_pkg_{os.getpid()}.zip"
+    assert os.path.isfile(os.path.join(scratch_root(), zip_name))
 
 
 def test_worker_import_survives_foreign_cwd(tmp_path):
